@@ -16,6 +16,12 @@ search join is either per-symbol (equi-join on symbol, co-partitioned,
 linear scale-out) or global (broadcast the strided query set). The
 ensemble is a (query, step) hash aggregate after ``posexplode`` and MAE
 folds back per query.
+
+Wide within-symbol backtests (the reference's L=256/P=192) take
+:func:`forecast_per_symbol` instead: the same numbers from one grouped
+Arrow pass per symbol over the gap-filled series, with window build,
+search, ensemble and MAE fused so no window array crosses a Spark
+boundary. ``plans/flagship.py`` picks the route by window width.
 """
 
 from __future__ import annotations
@@ -245,4 +251,177 @@ def error_summary(per_query_mae: DataFrame) -> DataFrame:
         F.avg("mae").alias("mae_mean"),
         F.stddev_pop("mae").alias("mae_std"),
         F.count(F.lit(1)).alias("n_queries"),
+    )
+
+
+#: queries scored per block inside one symbol's group of
+#: :func:`forecast_per_symbol`; with ``_ARROW_BUILD_CHUNK`` candidates
+#: per block this bounds the pair working set (distance accumulator,
+#: difference, sort keys) at ~256 × 4096 × 8 B = 8 MiB per array
+_QUERY_BLOCK = 256
+
+
+def forecast_per_symbol(
+    rows: DataFrame,
+    L: int,
+    pred_window: int,
+    ensemble: int = 2,
+    metric: str = "l2",
+    stride: int = 1,
+    cand_stride: int = 1,
+    eps: float = EPS,
+) -> DataFrame:
+    """Within-symbol backtest as ONE grouped Arrow pass: window build,
+    k-NN search, top-``ensemble`` forecast and MAE, fused per symbol.
+
+    ``rows``: gap-filled (symbol, split, time_idx, close) with split in
+    {'train', 'val'} and ``time_idx`` non-null and unique per (symbol,
+    split). Returns (symbol, window_id, mae) — the rows
+    ``forecast_evaluate(train_w, val_w, within_symbol=True)`` returns
+    for the windows of ``sliding_windows(rows, L, pred_window,
+    part_col=["symbol", "split"])`` with the flagship's stride cursors:
+    val windows at ``(window_id - first val window) % stride == 0``
+    are the queries, train windows at ``(window_id - first train
+    window) % cand_stride == 0`` the candidates, both kept only with a
+    full P-step future.
+
+    Same doubles as the Spark route: the window math is
+    ``windows.numpy_window_kernels``; l1/l2/cosine are sequential left
+    folds over the window positions from 0.0 (bitwise
+    ``functions.distance``'s folds, and its flat forms), with cosine's
+    zero-norm -2.0 sentinel; the top ``ensemble`` go by (dist, then
+    window_id), DESC for cosine, NaN ordered largest as Spark orders
+    it; ``pred = (0.0 + p_1 + ... + p_e) / e`` in rank order and
+    ``mae`` a left fold over the steps divided by P. ``pred`` is bitwise
+    the Spark route's for ensembles of 1 or 2 (two-term sums commute);
+    Spark's ``avg`` adds the steps in partition order, so MAE can
+    differ from it in the last bits.
+
+    Why: at wide shapes the Spark route's cost is plan shape, not
+    arithmetic — the window arrays are built, checkpointed and
+    re-attached across several jobs. Here they never leave the Python
+    worker. Memory per group (one symbol): the series, O(rows), plus
+    a block working set of ~(``_QUERY_BLOCK`` + ``_ARROW_BUILD_CHUNK``)
+    × (L + P) × 8 B for windows and ``_QUERY_BLOCK`` ×
+    ``_ARROW_BUILD_CHUNK`` × 8 B per pair array, whatever the symbol's
+    length: candidates are rebuilt per query block instead of held.
+    """
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    from .windows import _ARROW_BUILD_CHUNK, numpy_window_kernels
+
+    if metric not in METRICS_ORDER_DESC:
+        raise ValueError(f"metric must be one of {sorted(METRICS_ORDER_DESC)}")
+    P = pred_window
+    desc = METRICS_ORDER_DESC[metric]
+    chunk, q_block = _ARROW_BUILD_CHUNK, _QUERY_BLOCK
+    series, starts_of, zscore = numpy_window_kernels(L, eps)
+    in_schema = rows.schema
+    out_schema = StructType(
+        [
+            in_schema["symbol"],
+            StructField("window_id", in_schema["time_idx"].dataType),
+            StructField("mae", DoubleType()),
+        ]
+    )
+    jP = np.arange(P, dtype=np.int64)
+
+    def split_windows(table, split, every):
+        """(idx, v, starts): the split's rows sorted, and the starts of
+        its full-future windows on the ``every`` cursor."""
+        part = table.filter(pc.equal(table.column(1), split))
+        idx, v, bad = series(
+            part.column(2).combine_chunks(), part.column(3).combine_chunks()
+        )
+        built = starts_of(idx.size, bad, L)
+        if built.size == 0:
+            return idx, v, built
+        st = starts_of(idx.size, bad, L + P)  # L-frame + full future
+        return idx, v, st[(idx[st] - idx[built[0]]) % every == 0]
+
+    def dist_block(q, c):
+        """(queries × candidates) scores of z-scored windows as
+        sequential left folds over the L positions."""
+        qT, cT = q.T, np.ascontiguousarray(c.T)
+        acc = np.zeros((q.shape[0], c.shape[0]))
+        if metric == "cosine":
+            qn = np.zeros(q.shape[0])
+            cn = np.zeros(c.shape[0])
+            for j in range(L):
+                acc += qT[j][:, None] * cT[j][None, :]
+                qn += qT[j] * qT[j]
+                cn += cT[j] * cT[j]
+            denom = np.sqrt(cn)[None, :] * np.sqrt(qn)[:, None]
+            with np.errstate(divide="ignore", invalid="ignore"):
+                return np.where(denom > 0.0, acc / denom, -2.0)
+        for j in range(L):
+            d = cT[j][None, :] - qT[j][:, None]
+            acc += np.abs(d) if metric == "l1" else d * d
+        return np.sqrt(acc) if metric == "l2" else acc
+
+    def top(d, cand):
+        """Best ``ensemble`` columns per row: (dist, window_id), NaN
+        largest; ``cand`` columns are in window_id order, so a stable
+        sort on the score breaks ties by window_id."""
+        nan = np.isnan(d)
+        key = np.where(nan, 0.0, -d if desc else d)
+        order = np.lexsort((key, ~nan if desc else nan), axis=1)
+        order = order[:, :ensemble]
+        rows_i = np.arange(d.shape[0])[:, None]
+        return d[rows_i, order], cand[rows_i, order]
+
+    def evaluate(table: "pa.Table") -> "pa.Table":
+        out_ids, out_mae = [np.zeros(0, np.int64)], [np.zeros(0)]
+        q_idx, q_v, q_st = split_windows(table, "val", stride)
+        _, c_v, c_st = split_windows(table, "train", cand_stride)
+        if q_st.size and c_st.size:
+            e = min(ensemble, c_st.size)
+            for q0 in range(0, q_st.size, q_block):
+                qs = q_st[q0 : q0 + q_block]
+                q_center, q_scale, q_xs = zscore(q_v, qs)
+                best_d = np.zeros((qs.size, 0))
+                best = np.zeros((qs.size, 0), dtype=np.int64)
+                for c0 in range(0, c_st.size, chunk):
+                    cs = c_st[c0 : c0 + chunk]
+                    d = dist_block(q_xs, zscore(c_v, cs)[2])
+                    best_d, best = top(
+                        np.concatenate([best_d, d], axis=1),
+                        np.concatenate(
+                            [best, np.broadcast_to(cs, d.shape)], axis=1
+                        ),
+                    )
+                pred = np.zeros((qs.size, P))
+                for r in range(e):  # rank order, 0.0 + p_1 + ...
+                    m_center, m_scale, _ = zscore(c_v, best[:, r])
+                    fut = c_v[best[:, r][:, None] + L + jP]
+                    pred += (fut - m_center[:, None]) / (m_scale + eps)[
+                        :, None
+                    ]
+                pred = pred / float(e)
+                target = (q_v[qs[:, None] + L + jP] - q_center[:, None]) / (
+                    q_scale + eps
+                )[:, None]
+                err = np.abs(pred - target)
+                acc = np.zeros(qs.size)
+                for j in range(P):
+                    acc += err[:, j]
+                out_ids.append(q_idx[qs])
+                out_mae.append(acc / float(P))
+        ids = np.concatenate(out_ids)
+        return pa.Table.from_arrays(
+            [
+                pa.repeat(table.column(0)[0], ids.size),
+                pa.array(ids, type=table.column(2).type),
+                pa.array(np.concatenate(out_mae)),
+            ],
+            names=[f.name for f in out_schema],
+        )
+
+    return (
+        rows.select("symbol", "split", "time_idx", "close")
+        .groupBy("symbol")
+        .applyInArrow(evaluate, schema=out_schema)
     )

@@ -10,15 +10,25 @@ OWN mean and population stddev with epsilon 1e-8 on the scale
 (``future``) — the forecast target/gather (notebooks/test.ipynb cell 20)
 — from the SAME sort order, avoiding a separate as-of join.
 
-Scale design: ``collect_list`` over a row frame amplifies data ~L×.
-Mitigations baked in: (1) only the single value column is collected —
-project before calling; (2) both the window frame and the future frame
-share one Window spec → one shuffle + one sort per symbol; (3) for
-strided evaluation, filter on ``window_id % stride`` BEFORE the
-normalize/embed stages consume the arrays. At 100 TB the per-symbol
-series is still modest (time × symbol layout); partition count scales
-with symbols, and no symbol's series needs to fit anywhere but one
-task's spill-able sort.
+Scale design: every window is L (+P) values, so the build amplifies
+data ~(L+P)×. Two routes, picked by the window width alone
+(``L + pred_window >= ARROW_BUILD_MIN_WIDTH``):
+
+- narrow (JVM): ``collect_list`` over a row frame. Only the single
+  value column is collected (project before calling); the window and
+  future frames share one Window spec → one shuffle + one sort per
+  group, and that sort is the JVM's spill-able sort, so no group's
+  series has to fit in memory.
+- wide (Arrow): one ``applyInArrow`` pass per group. Nothing spills:
+  the group's rows (one symbol's series) are held whole in one Python
+  worker, and so is the group's output, O(rows × (L+P) × 8 B), until
+  Arrow hands it back; ``_ARROW_BUILD_CHUNK`` bounds only the NumPy
+  working set that builds it.
+
+For strided evaluation, filter on ``window_id % stride`` BEFORE the
+normalize/embed stages consume the arrays. The backtest's wide route
+(``operators.forecast.forecast_per_symbol``) reuses this module's
+NumPy window math and never returns the arrays at all.
 """
 
 from __future__ import annotations
@@ -115,6 +125,67 @@ def sliding_windows(
     return out.select(*cols)
 
 
+def numpy_window_kernels(L: int, eps: float = EPS):
+    """The NumPy window math of the wide routes — ``(series,
+    starts_of, zscore)`` — shared by :func:`_sliding_windows_arrow`
+    and ``operators.forecast.forecast_per_symbol`` so there is one
+    copy of it. The functions are built here, not at module level,
+    because Spark ships them to Python workers by value (workers do
+    not import this package).
+
+    - ``series(idx_a, val_a)`` -> ``(idx, v, bad)``: one group's rows
+      sorted by the index as NumPy arrays; ``bad`` is the running
+      count of NULL values (length n+1), or None when there are none.
+    - ``starts_of(n, bad, width)``: row offsets whose next ``width``
+      values are all non-NULL (the frame collect_list would fill).
+    - ``zscore(v, st)`` -> ``(center, scale, xs)`` of the L-windows
+      starting at ``st``; see :func:`_sliding_windows_arrow` for why
+      these are the JVM path's doubles bit for bit.
+    """
+    import numpy as np
+
+    jL = np.arange(L, dtype=np.int64)
+
+    def series(idx_a, val_a):
+        assert idx_a.null_count == 0, "window index must be non-null"
+        idx = idx_a.to_numpy(zero_copy_only=False)
+        order = np.argsort(idx, kind="stable")
+        v = np.ascontiguousarray(
+            val_a.to_numpy(zero_copy_only=False)[order]
+        )
+        bad = None
+        if val_a.null_count:
+            bad = np.zeros(idx.size + 1, dtype=np.int64)
+            np.cumsum(
+                np.asarray(val_a.is_null())[order].astype(np.int64),
+                out=bad[1:],
+            )
+        return idx[order], v, bad
+
+    def starts_of(n, bad, width):
+        if n < width:
+            return np.zeros(0, dtype=np.int64)
+        if bad is None:
+            return np.arange(n - width + 1, dtype=np.int64)
+        return np.nonzero(bad[width:] - bad[: n + 1 - width] == 0)[0]
+
+    def zscore(v, st):
+        W = v[st[:, None] + jL]  # (m, L), all-valid by construction
+        s = np.zeros(st.size, dtype=np.float64)
+        for j in range(L):  # frame-order left fold, 0.0 + x1 + ...
+            s += W[:, j]
+        center = s / float(L)
+        acc = np.zeros(st.size, dtype=np.float64)
+        for j in range(L):  # same fold order as the aggregate lambda
+            d = W[:, j] - center
+            acc += d * d
+        scale = np.sqrt(acc / float(L))
+        xs = (W - center[:, None]) / (scale + eps)[:, None]
+        return center, scale, xs
+
+    return series, starts_of, zscore
+
+
 def _sliding_windows_arrow(
     df: DataFrame,
     value_col: str,
@@ -146,6 +217,13 @@ def _sliding_windows_arrow(
     array. NaN VALUES are not NULLs and flow through both engines'
     arithmetic identically.
 
+    Precondition: ``idx_col`` is non-null and unique within each
+    group (upstream dedup/resample guarantee it). ``np.argsort``
+    orders NaN last where Spark sorts NULLS FIRST, and a repeated
+    index has no defined frame order, so either would silently
+    diverge from the JVM path; the shared helper asserts the
+    non-null half.
+
     Trade-off vs the JVM path (why small shapes keep it): the
     grouped Python pass drops Catalyst's knowledge of the upstream
     hash partitioning, so a downstream operator keyed on the parts
@@ -176,9 +254,9 @@ def _sliding_windows_arrow(
 
     n_parts = len(parts)
     chunk = _ARROW_BUILD_CHUNK
+    series, starts_of, zscore = numpy_window_kernels(L, eps)
 
     def build(table: "pa.Table") -> "pa.Table":
-        jL = np.arange(L, dtype=np.int64)
         jP = np.arange(P, dtype=np.int64) if P else None
         list_t = pa.list_(pa.float64())
 
@@ -198,22 +276,11 @@ def _sliding_windows_arrow(
             return empty()
         # column order fixed by the select below: parts, idx, value
         idx_a = table.column(n_parts).combine_chunks()
-        val_a = table.column(n_parts + 1).combine_chunks()
-        idx = idx_a.to_numpy(zero_copy_only=False)
-        order = np.argsort(idx, kind="stable")
-        idx = idx[order]
-        v = np.ascontiguousarray(
-            val_a.to_numpy(zero_copy_only=False)[order]
+        idx, v, bad = series(
+            idx_a, table.column(n_parts + 1).combine_chunks()
         )
-        if val_a.null_count:
-            inv_mask = np.asarray(val_a.is_null())[order]
-            bad = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(inv_mask.astype(np.int64), out=bad[1:])
-            starts = np.nonzero(bad[L:] - bad[: n + 1 - L] == 0)[0]
-            valid = ~inv_mask
-        else:
-            starts = np.arange(n - L + 1, dtype=np.int64)
-            valid = None
+        starts = starts_of(n, bad, L)
+        valid = None if bad is None else np.diff(bad) == 0
         if starts.size == 0:
             return empty()
 
@@ -222,17 +289,7 @@ def _sliding_windows_arrow(
         for c0 in range(0, starts.size, chunk):
             st = starts[c0 : c0 + chunk]
             m = st.size
-            W = v[st[:, None] + jL]  # (m, L), all-valid by keep mask
-            s = np.zeros(m, dtype=np.float64)
-            for j in range(L):  # frame-order left fold, 0.0 + x1 + ...
-                s += W[:, j]
-            center = s / float(L)
-            acc = np.zeros(m, dtype=np.float64)
-            for j in range(L):  # same fold order as the aggregate lambda
-                d = W[:, j] - center
-                acc += d * d
-            scale = np.sqrt(acc / float(L))
-            xs = (W - center[:, None]) / (scale + eps)[:, None]
+            center, scale, xs = zscore(v, st)
             arrays = [
                 pa.repeat(table.column(k)[0], m) for k in range(n_parts)
             ]

@@ -4,10 +4,27 @@ events → dedup keep-last → 6h OHLC resample → time_idx → warmup skip →
 time-ordered split → per-split gap fill → sliding windows + z-score →
 k-NN search → analogical forecast → per-query MAE.
 
-This is ONE lazy DataFrame plan end-to-end; Catalyst prunes the events
-scan down to (user_id, ts, value, event_id) and AQE sizes every
-exchange. Embedding = the z-scored window itself (the reference's VAE
-latent is an offline-trained artifact; the engine's contract is the
+Everything up to the gap fill is ONE lazy DataFrame plan with one wide
+exchange (hash by symbol); Catalyst prunes the events scan down to
+(user_id, ts, value, event_id). From the gap-filled rows on, the
+backtest (:func:`flagship_per_query_mae`) takes one of two routes,
+picked by the same observable width rule as the window build
+(``L + pred_window >= windows.ARROW_BUILD_MIN_WIDTH``):
+
+- narrow windows, or global search: Spark operators — the window
+  build, a k-NN search join (co-partitioned per symbol, or a broadcast
+  of the strided query set), a rank window for the top-2 and
+  aggregates for the ensemble and MAE (``forecast_evaluate``).
+- wide windows with within-symbol search (the reference's L=256/P=192):
+  one fused per-symbol Arrow pass (``forecast_per_symbol``) builds the
+  windows, searches, ensembles and scores inside the Python worker.
+  The window arrays never cross a Spark boundary; memory per symbol is
+  its series plus a fixed block working set (see that function).
+
+Serving (``forecast_evaluate`` against a cached train store) and the
+per-step surface (:func:`flagship_step_errors`) keep the Spark route at
+every width. Embedding = the z-scored window itself (the reference's
+VAE latent is an offline-trained artifact; the engine's contract is the
 search/forecast query shape — see SURVEY.md §7 "out of scope").
 
 Deliberate deviations from the notebook (documented; the DuckDB oracle
@@ -34,10 +51,15 @@ from ..operators.cleaning import (
     positional_skip_frac,
     positional_split,
 )
-from ..operators.forecast import error_summary, forecast_evaluate
+from ..operators import windows as window_ops
+from ..operators.forecast import (
+    error_summary,
+    forecast_evaluate,
+    forecast_per_symbol,
+)
 from ..operators.gapfill import fill_missing_time_idx
 from ..operators.resample import resample_ohlcv
-from ..operators.windows import ARROW_BUILD_MIN_WIDTH, sliding_windows
+from ..operators.windows import sliding_windows
 from ..sources.tables import events_series
 
 
@@ -147,6 +169,21 @@ def flagship_train_store(
     )
 
 
+def _flagship_filled(
+    spark: SparkSession, sf_dir: str, p: FlagshipParams
+) -> DataFrame:
+    """Gap-filled (symbol, split, time_idx, close): the input of both
+    backtest routes."""
+    labeled = flagship_labeled(spark, sf_dir, p)
+    return fill_missing_time_idx(
+        labeled.select("symbol", "split", "time_idx", "close"),
+        part_col=["symbol", "split"],
+        idx_col="time_idx",
+        ts_col="__none__",
+        fill_cols=["close"],
+    ).select("symbol", "split", "time_idx", "close")
+
+
 def flagship_windows(
     spark: SparkSession, sf_dir: str, p: FlagshipParams = FlagshipParams()
 ) -> DataFrame:
@@ -159,16 +196,8 @@ def flagship_windows(
     partitioning, so the whole chain is exchange-free — stage count
     stays flat no matter how many operators stack.
     """
-    labeled = flagship_labeled(spark, sf_dir, p)
-    filled = fill_missing_time_idx(
-        labeled.select("symbol", "split", "time_idx", "close"),
-        part_col=["symbol", "split"],
-        idx_col="time_idx",
-        ts_col="__none__",
-        fill_cols=["close"],
-    ).select("symbol", "split", "time_idx", "close")
     return sliding_windows(
-        filled,
+        _flagship_filled(spark, sf_dir, p),
         value_col="close",
         L=p.L,
         pred_window=p.pred_window,
@@ -231,7 +260,7 @@ def _flagship_train_val(
     #   min and max) whenever any complete window exists, and when
     #   none exists the windows side is already empty, making the
     #   anchor irrelevant. One tiny per-symbol aggregate, broadcast.
-    arrow_build = p.L + p.pred_window >= ARROW_BUILD_MIN_WIDTH
+    arrow_build = p.L + p.pred_window >= window_ops.ARROW_BUILD_MIN_WIDTH
     if arrow_build:
         labeled = flagship_labeled(spark, sf_dir, p).select(
             "symbol", "split", "time_idx"
@@ -273,6 +302,25 @@ def _flagship_train_val(
 def flagship_per_query_mae(
     spark: SparkSession, sf_dir: str, p: FlagshipParams = FlagshipParams()
 ) -> DataFrame:
+    """(symbol, window_id, mae) per strided val query; the route is
+    picked by the width rule in the module docstring."""
+    if (
+        p.within_symbol
+        and p.L + p.pred_window >= window_ops.ARROW_BUILD_MIN_WIDTH
+    ):
+        rows = _flagship_filled(spark, sf_dir, p)
+        if p.query_symbol_mod is not None:
+            # within-symbol: a symbol without queries has no output
+            rows = rows.filter(F.col("symbol") % p.query_symbol_mod == 0)
+        return forecast_per_symbol(
+            rows,
+            L=p.L,
+            pred_window=p.pred_window,
+            ensemble=p.ensemble,
+            metric=p.metric,
+            stride=p.stride,
+            cand_stride=p.cand_stride,
+        )
     train_w, val_w = _flagship_train_val(spark, sf_dir, p)
     return forecast_evaluate(
         train_w,

@@ -21,6 +21,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical RAM, between 2g and 32g; 12g where the
+    host has no POSIX ``os.sysconf`` (AttributeError) or does not
+    report its memory (ValueError/OSError)."""
+    try:
+        page = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        half_gb = max(2, int(page / (2 * 1024**3)))
+    except (AttributeError, ValueError, OSError):
+        half_gb = 12
+    return f"{min(32, half_gb)}g"
+
+
 def get_spark(
     app_name: str = "bdspf-spark",
     cpus: str | int | None = None,
@@ -36,14 +48,11 @@ def get_spark(
     # hosts smaller than the 128 GiB harness (r15 advice);
     # BDSPF_DRIVER_MEMORY overrides, clusters size executors
     # separately.
-    driver_memory = driver_memory or os.environ.get("BDSPF_DRIVER_MEMORY")
-    if driver_memory is None:
-        try:
-            page = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-            half_gb = max(2, int(page / (2 * 1024**3)))
-        except (ValueError, OSError):
-            half_gb = 12
-        driver_memory = f"{min(32, half_gb)}g"
+    driver_memory = (
+        driver_memory
+        or os.environ.get("BDSPF_DRIVER_MEMORY")
+        or default_driver_memory()
+    )
     cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("BDSPF_SHUFFLE_PARTITIONS", "32")
