@@ -2,15 +2,25 @@
 
 The reference pulls ~85 indicators from the `ta` package
 (core/data/preprocess.py:11-16, optional surface) plus explicit SMA
-50/100/200 (preprocess.py:46-51) and EMA (preprocess.py:52-54). Here a
-curated subset is implemented natively as window expressions (JVM-side,
-one shared partition spec → no extra shuffle when the plan is already
-hash-partitioned on the series key), and the genuinely-recursive
-EMA family (EMA, MACD, RSI, ATR-Wilder) goes through ONE Arrow
-``applyInPandas`` pass per series — the documented escape hatch for
-infinite-frame recursions no SQL window can express.
+50/100/200 (preprocess.py:46-51) and EMA (preprocess.py:52-54). Here
+the batteries (:func:`add_indicators` /2/3/4 and
+:func:`recursive_battery_arrow`) and the EMA family (:func:`ewm_smooth`,
+:func:`garch_filter`, :func:`macd`, :func:`trend_battery_arrow`) are
+NumPy kernels on ``seriespass.series_pass``: one
+``groupBy(symbol).applyInArrow`` pass per series that sorts the rows
+once. Consecutive calls fuse into ONE pass (see ``seriespass``), so the
+whole feature chain — five batteries and Savitzky–Golay — is one Arrow
+pass with no ``Window`` and no exchange of its own. The small
+single-indicator helpers (:func:`sma`, :func:`rolling_corr`,
+:func:`add_indicators5`, the lag-derived inputs of :func:`rsi` /
+:func:`atr`) stay JVM window expressions.
 
-Numeric contracts:
+Numeric contracts (what the DuckDB oracles mirror):
+- Frame sums and averages are left folds over the frame in frame
+  order — Spark's no-retraction sliding-frame re-aggregation; running
+  sums are sequential ``np.cumsum``; ``stddev_pop`` follows Spark's
+  ``CentralMomentAgg`` update order; row-number guards are index
+  comparisons (``seriespass.frame_ops``).
 - EMA: pandas ``ewm(span, adjust=False)`` recursion
   ``y_t = (1-a)*y_{t-1} + a*x_t`` seeded ``y_0 = x_0``; evaluated in
   exactly that operand order so the DuckDB oracle (sequential
@@ -21,10 +31,13 @@ Numeric contracts:
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StructField, StructType
+
+from .seriespass import frame_ops, series_pass
 
 
 def _base(part_col: str, idx_col: str) -> Window:
@@ -244,9 +257,8 @@ def add_indicators(
     don_n: int = 20,
     vwap_n: int = 20,
 ) -> DataFrame:
-    """One-pass battery of frame-expressible indicators. All columns
-    share one Window spec (same partitioning + ordering), so Catalyst
-    plans a single sort and zero additional exchanges:
+    """First battery, a kernel on the per-series pass (fuses with the
+    other batteries and Savitzky–Golay into one pass):
 
     - ``ret`` / ``logret``: simple and log returns
     - ``sma{bb_n}``, ``bb_upper``/``bb_lower``: Bollinger bands
@@ -256,51 +268,43 @@ def add_indicators(
     - ``vwap{vwap_n}``: rolling volume-weighted average price
     - ``willr{willr_n}``: Williams %R
     - ``don_upper``/``don_lower``/``don_mid``: Donchian channel
+
+    Close/high/low must be non-null (gap-filled; a NULL raises
+    ``ValueError``); a NULL volume counts as 1.0. Zero denominators (flat ranges, zero prices, an all-zero
+    volume frame) yield NULL.
     """
-    w = _base(part_col, idx_col)
-    cum = w.rowsBetween(Window.unboundedPreceding, 0)
-    rn = F.row_number().over(w)
-    c, h, lo, v = (F.col(x) for x in (close_col, high_col, low_col, volume_col))
-    prev = F.lag(c).over(w)
+    ops = frame_ops()
+    names = [
+        "ret", "logret", f"sma{bb_n}", "bb_upper", "bb_lower",
+        f"roc{roc_n}", "obv", f"vwap{vwap_n}", f"willr{willr_n}",
+        "don_upper", "don_lower", "don_mid",
+    ]
 
-    bb_frame = w.rowsBetween(-(bb_n - 1), 0)
-    mid = F.avg(c).over(bb_frame)
-    sd = F.stddev_pop(c).over(bb_frame)
-    will_frame = w.rowsBetween(-(willr_n - 1), 0)
-    hh, ll = F.max(h).over(will_frame), F.min(lo).over(will_frame)
-    don_frame = w.rowsBetween(-(don_n - 1), 0)
-    du, dl = F.max(h).over(don_frame), F.min(lo).over(don_frame)
+    def kernel(cols):
+        c, h, lo = (cols.need(x) for x in (close_col, high_col, low_col))
+        vnz = ops.coalesce(cols[volume_col], 1.0)
+        prev = ops.lag(c)
+        mid, sd = ops.favg(c, bb_n), ops.fstd(c, bb_n)
+        hh, ll = ops.fmax(h, willr_n), ops.fmin(lo, willr_n)
+        du, dl = ops.fmax(h, don_n), ops.fmin(lo, don_n)
+        logret = np.where((c > 0) & (prev > 0), ops.log(c / prev), np.nan)
+        vwap = ops.div(ops.fsum(c * vnz, vwap_n), ops.fsum(vnz, vwap_n))
+        return dict(zip(names, (
+            ops.div(c, prev) - 1.0,
+            logret,
+            ops.guard(mid, bb_n),
+            ops.guard(mid + 2.0 * sd, bb_n),
+            ops.guard(mid - 2.0 * sd, bb_n),
+            100.0 * (ops.div(c, ops.lag(c, roc_n)) - 1.0),
+            ops.cumsum(np.sign(c - prev) * vnz),
+            vwap,
+            ops.guard(ops.div(-100.0 * (hh - c), hh - ll), willr_n),
+            ops.guard(du, don_n),
+            ops.guard(dl, don_n),
+            ops.guard((du + dl) / 2.0, don_n),
+        )))
 
-    # zero-guards (nullif) keep ANSI mode happy and define semantics on
-    # degenerate inputs: flat ranges / zero prices yield NULL, not error
-    prev_nz = F.nullif(prev, F.lit(0.0))
-    lag_n_nz = F.nullif(F.lag(c, roc_n).over(w), F.lit(0.0))
-    # VWAP over a sliding frame. Spark recomputes sliding-frame
-    # aggregates sequentially left-to-right (no retraction), so the
-    # DuckDB oracle reproduces it bitwise with a list_reduce fold over
-    # the same frame
-    vnz = F.coalesce(v, F.lit(1.0))
-    vwap_frame = w.rowsBetween(-(vwap_n - 1), 0)
-    vwap = F.sum(c * vnz).over(vwap_frame) / F.sum(vnz).over(vwap_frame)
-    return df.withColumns(
-        {
-            "ret": c / prev_nz - 1,
-            "logret": F.when((c > 0) & (prev > 0), F.log(c / prev)),
-            f"sma{bb_n}": F.when(rn >= bb_n, mid),
-            "bb_upper": F.when(rn >= bb_n, mid + 2 * sd),
-            "bb_lower": F.when(rn >= bb_n, mid - 2 * sd),
-            f"roc{roc_n}": 100 * (c / lag_n_nz - 1),
-            "obv": F.sum(F.signum(c - prev) * vnz).over(cum),
-            f"vwap{vwap_n}": vwap,
-            f"willr{willr_n}": F.when(
-                rn >= willr_n,
-                -100 * (hh - c) / F.nullif(hh - ll, F.lit(0.0)),
-            ),
-            "don_upper": F.when(rn >= don_n, du),
-            "don_lower": F.when(rn >= don_n, dl),
-            "don_mid": F.when(rn >= don_n, (du + dl) / 2),
-        }
-    )
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def ewm_smooth(
@@ -309,35 +313,24 @@ def ewm_smooth(
     part_col: str = "symbol",
     idx_col: str = "time_idx",
 ) -> DataFrame:
-    """Exponential smoothing of one or more columns in ONE Arrow pass.
+    """Exponential smoothing of one or more columns, a kernel on the
+    per-series pass.
 
     ``alphas`` maps output column -> (input column, alpha). Recursion
     ``y = (1-a)*y + a*x`` seeded with the first non-null input value;
-    output is null until the input has a value (W4 escape hatch —
+    a null input carries the state and emits null (W4 escape hatch —
     SURVEY.md §2.5: not expressible as a finite-frame window).
     """
-    fields = list(df.schema.fields) + [
-        StructField(out, DoubleType()) for out in alphas
-    ]
-    schema = StructType(fields)
+    ops = frame_ops()
     items = [(out, src, float(a)) for out, (src, a) in alphas.items()]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col)
-        for out, src, a in items:
-            xs = pdf[src].to_numpy()
-            ys = [None] * len(xs)
-            y = None
-            for i, x in enumerate(xs):
-                if x != x or x is None:  # NaN/null: carry state, emit null
-                    ys[i] = None
-                    continue
-                y = float(x) if y is None else (1.0 - a) * y + a * float(x)
-                ys[i] = y
-            pdf[out] = ys
-        return pdf
+    def kernel(cols):
+        return {
+            out: ops.on_valid(cols[src], lambda x, a=a: ops.ewm(x, a))
+            for out, src, a in items
+        }
 
-    return df.groupBy(part_col).applyInPandas(fn, schema)
+    return series_pass(df, kernel, list(alphas), part_col, idx_col)
 
 
 def garch_filter(
@@ -353,31 +346,26 @@ def garch_filter(
     """GARCH(1,1) conditional-variance filter (fixed parameters, no
     fitting): ``v_t = omega + alpha*r2_t + beta*v_{t-1}`` seeded with
     the first non-null squared return (``v = r2``, the same
-    RiskMetrics-style seed as the EWMA vol twin). One Arrow pass per
-    series — the affine recursion's infinite memory is the same W4
-    escape-hatch shape as :func:`ewm_smooth`; evaluated in exactly the
-    operand order written above so a DuckDB recursive CTE consuming
-    the same grid-snapped ``r2`` reproduces ``v`` bitwise. Null input
-    carries state and emits null."""
-    fields = list(df.schema.fields) + [StructField(out_col, DoubleType())]
-    schema = StructType(fields)
+    RiskMetrics-style seed as the EWMA vol twin). A kernel on the
+    per-series pass — the affine recursion's infinite memory is the
+    same W4 escape-hatch shape as :func:`ewm_smooth`; evaluated in
+    exactly the operand order written above so a DuckDB recursive CTE
+    consuming the same grid-snapped ``r2`` reproduces ``v`` bitwise.
+    Null input carries state and emits null."""
+    ops = frame_ops()
     o, a, b = float(omega), float(alpha), float(beta)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col)
-        xs = pdf[r2_col].to_numpy()
-        ys = [None] * len(xs)
-        y = None
-        for i, x in enumerate(xs):
-            if x != x or x is None:  # NaN/null: carry state, emit null
-                ys[i] = None
-                continue
-            y = float(x) if y is None else o + a * float(x) + b * y
-            ys[i] = y
-        pdf[out_col] = ys
-        return pdf
+    def garch(xs):
+        xs = xs.tolist()
+        ys = [xs[0]]
+        for x in xs[1:]:
+            ys.append(o + a * x + b * ys[-1])
+        return np.array(ys)
 
-    return df.groupBy(part_col).applyInPandas(fn, schema)
+    def kernel(cols):
+        return {out_col: ops.on_valid(cols[r2_col], garch)}
+
+    return series_pass(df, kernel, [out_col], part_col, idx_col)
 
 
 def ema(
@@ -406,54 +394,31 @@ def macd(
     part_col: str = "symbol",
     idx_col: str = "time_idx",
 ) -> DataFrame:
-    """MACD line, signal line, histogram (classic 12/26/9).
+    """MACD line, signal line, histogram (classic 12/26/9), a kernel on
+    the per-series pass.
 
     The signal line is an EMA *of the macd line*, i.e. a chained
-    recursion — computed in the SAME Arrow pass as the two price EMAs
-    (one shuffle, one Python stage) rather than as a second
-    applyInPandas round-trip: per element, macd_t is already available
-    when the signal recursion consumes it, and the operand order
-    matches the oracle's two-stage fold exactly.
+    recursion over the same non-null rows as the two price EMAs; the
+    operand order matches the oracle's two-stage fold exactly. A null
+    input carries every state and emits nulls.
     """
+    ops = frame_ops()
     a_f, a_s, a_sig = (
         2.0 / (fast + 1),
         2.0 / (slow + 1),
         2.0 / (signal + 1),
     )
-    fields = list(df.schema.fields) + [
-        StructField(c, DoubleType())
-        for c in (f"ema{fast}", f"ema{slow}", "macd", "macd_signal", "macd_hist")
-    ]
-    schema = StructType(fields)
+    names = [f"ema{fast}", f"ema{slow}", "macd", "macd_signal", "macd_hist"]
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col)
-        xs = pdf[value_col].to_numpy()
-        n = len(xs)
-        ef = [None] * n
-        es = [None] * n
-        md = [None] * n
-        sig = [None] * n
-        hist = [None] * n
-        yf = ys = ysig = None
-        for i in range(n):
-            x = xs[i]
-            if x != x or x is None:
-                continue
-            x = float(x)
-            yf = x if yf is None else (1.0 - a_f) * yf + a_f * x
-            ys = x if ys is None else (1.0 - a_s) * ys + a_s * x
-            m = yf - ys
-            ysig = m if ysig is None else (1.0 - a_sig) * ysig + a_sig * m
-            ef[i], es[i], md[i], sig[i], hist[i] = yf, ys, m, ysig, m - ysig
-        pdf[f"ema{fast}"] = ef
-        pdf[f"ema{slow}"] = es
-        pdf["macd"] = md
-        pdf["macd_signal"] = sig
-        pdf["macd_hist"] = hist
-        return pdf
+    def kernel(cols):
+        x = cols[value_col]
+        ef = ops.on_valid(x, lambda v: ops.ewm(v, a_f))
+        es = ops.on_valid(x, lambda v: ops.ewm(v, a_s))
+        md = ef - es
+        sig = ops.on_valid(md, lambda v: ops.ewm(v, a_sig))
+        return dict(zip(names, (ef, es, md, sig, md - sig)))
 
-    return df.groupBy(part_col).applyInPandas(fn, schema)
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def rsi(
@@ -523,86 +488,63 @@ def add_indicators2(
     ichi_conv: int = 9,
     ichi_base: int = 26,
 ) -> DataFrame:
-    """Second frame-expressible battery, one shared Window spec:
+    """Second battery, a kernel on the per-series pass:
 
     - ``stoch_k``/``stoch_d``: Stochastic oscillator %K (close within
       the n-period high/low range) and its ``stoch_d``-SMA signal
     - ``cci{cci_n}``: Commodity Channel Index —
       (tp − SMA(tp)) / (0.015 · mean |tp − SMA(tp)| over the window);
       the mean absolute deviation is around the CURRENT window's SMA,
-      which no plain window aggregate expresses — computed as a
-      sequential fold over the collected frame (oracle-matched)
+      a sequential fold over the frame (oracle-matched)
     - ``mfi{mfi_n}``: Money Flow Index — ratio of up-flow to down-flow
       typical-price·volume sums over the window
     - ``ichi_conv``/``ichi_base``: Ichimoku conversion/base lines —
       midpoints of the n-period high/low range
+
+    Close/high/low must be non-null (a NULL raises ``ValueError``); a
+    NULL volume drops that bar's flow from the MFI sums.
     """
-    w = _base(part_col, idx_col)
-    rn = F.row_number().over(w)
-    c, h, lo, v = (F.col(x) for x in (close_col, high_col, low_col, volume_col))
-    tp = (h + lo + c) / 3.0
+    ops = frame_ops()
+    names = [
+        "stoch_k", "stoch_d", f"cci{cci_n}", f"mfi{mfi_n}",
+        "ichi_conv", "ichi_base",
+    ]
 
-    st_frame = w.rowsBetween(-(stoch_n - 1), 0)
-    hh, ll = F.max(h).over(st_frame), F.min(lo).over(st_frame)
-    k_raw = 100.0 * (c - ll) / F.nullif(hh - ll, F.lit(0.0))
+    def kernel(cols):
+        c, h, lo = (cols.need(x) for x in (close_col, high_col, low_col))
+        v = cols[volume_col]
+        tp = (h + lo + c) / 3.0
+        hh, ll = ops.fmax(h, stoch_n), ops.fmin(lo, stoch_n)
+        k = ops.guard(ops.div(100.0 * (c - ll), hh - ll), stoch_n)
 
-    out = df.withColumn("__k", F.when(rn >= stoch_n, k_raw))
-    wd = _base(part_col, idx_col).rowsBetween(-(stoch_d - 1), 0)
+        # mean |tp - SMA| around the current frame's SMA: fold over
+        # full frames (partial ones are guarded away below)
+        sma = ops.favg(tp, cci_n)
+        tpp = np.concatenate([np.zeros(cci_n - 1), tp])
+        acc = np.zeros(tp.size)
+        for j in range(cci_n):
+            acc = acc + np.abs(tpp[j : j + tp.size] - sma)
+        cci = ops.div(tp - sma, 0.015 * (acc / cci_n))
 
-    cci_frame = w.rowsBetween(-(cci_n - 1), 0)
-    # window expressions can't live inside higher-order-function
-    # lambdas: materialize the frame list and its SMA as columns first,
-    # fold over plain columns in the next projection
-    out = out.withColumn("__tp", tp).withColumn(
-        "__tp_sma", F.avg(tp).over(cci_frame)
-    ).withColumn("__tps", F.collect_list(tp).over(cci_frame))
-    mad = F.aggregate(
-        F.col("__tps"),
-        F.lit(0.0),
-        lambda acc, x: acc + F.abs(x - F.col("__tp_sma")),
-    ) / F.size("__tps")
-    cci = (F.col("__tp") - F.col("__tp_sma")) / F.nullif(
-        0.015 * mad, F.lit(0.0)
-    )
-
-    prev_tp = F.lag(tp).over(w)
-    pos_flow = F.when(tp > prev_tp, tp * v).otherwise(F.lit(0.0))
-    neg_flow = F.when(tp < prev_tp, tp * v).otherwise(F.lit(0.0))
-    out = out.withColumn("__pf", pos_flow).withColumn("__nf", neg_flow)
-    mfi_frame = _base(part_col, idx_col).rowsBetween(-(mfi_n - 1), 0)
-    pf_sum = F.sum("__pf").over(mfi_frame)
-    nf_sum = F.sum("__nf").over(mfi_frame)
-    mfi = F.when(nf_sum == 0.0, F.lit(100.0)).otherwise(
-        100.0 - 100.0 / (1.0 + pf_sum / nf_sum)
-    )
-
-    conv_frame = w.rowsBetween(-(ichi_conv - 1), 0)
-    base_frame = w.rowsBetween(-(ichi_base - 1), 0)
-
-    return (
-        out.withColumns(
-            {
-                "stoch_k": F.col("__k"),
-                "stoch_d": F.when(
-                    rn >= stoch_n + stoch_d - 1,
-                    F.avg("__k").over(wd),
-                ),
-                f"cci{cci_n}": F.when(rn >= cci_n, cci),
-                f"mfi{mfi_n}": F.when(rn >= mfi_n + 1, mfi),
-                "ichi_conv": F.when(
-                    rn >= ichi_conv,
-                    (F.max(h).over(conv_frame) + F.min(lo).over(conv_frame))
-                    / 2.0,
-                ),
-                "ichi_base": F.when(
-                    rn >= ichi_base,
-                    (F.max(h).over(base_frame) + F.min(lo).over(base_frame))
-                    / 2.0,
-                ),
-            }
+        prev_tp = ops.lag(tp)
+        pf = np.where(tp > prev_tp, tp * v, 0.0)
+        nf = np.where(tp < prev_tp, tp * v, 0.0)
+        pf_sum, nf_sum = ops.fsum(pf, mfi_n), ops.fsum(nf, mfi_n)
+        mfi = np.where(
+            nf_sum == 0.0, 100.0, 100.0 - 100.0 / (1.0 + pf_sum / nf_sum)
         )
-        .drop("__k", "__pf", "__nf", "__tp", "__tp_sma", "__tps")
-    )
+        conv = (ops.fmax(h, ichi_conv) + ops.fmin(lo, ichi_conv)) / 2.0
+        base = (ops.fmax(h, ichi_base) + ops.fmin(lo, ichi_base)) / 2.0
+        return dict(zip(names, (
+            k,
+            ops.guard(ops.favg(k, stoch_d), stoch_n + stoch_d - 1),
+            ops.guard(cci, cci_n),
+            ops.guard(mfi, mfi_n + 1),
+            ops.guard(conv, ichi_conv),
+            ops.guard(base, ichi_base),
+        )))
+
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def add_indicators3(
@@ -619,8 +561,7 @@ def add_indicators3(
     eom_n: int = 14,
     dpo_n: int = 20,
 ) -> DataFrame:
-    """Third frame-expressible battery (W12 long tail), one shared
-    Window spec — all JVM window expressions, no Python:
+    """Third battery (W12 long tail), a kernel on the per-series pass:
 
     - ``aroon_up``/``aroon_down``: 100·pos-of-extreme/(n−1) over the
       n-bar frame (first occurrence of the extreme, both engines'
@@ -648,225 +589,96 @@ def add_indicators3(
     - ``cret``: cumulative return vs the series' first close, percent
     - ``ui14``: Ulcer Index — RMS of the 14-bar percent drawdown from
       the 14-bar high
+
+    Close/high/low must be non-null (a NULL raises ``ValueError``);
+    NULL volumes drop out of the volume sums (and count as no move in
+    the ease-of-movement and volume-price-trend inputs).
     """
-    w = _base(part_col, idx_col)
-    rn = F.row_number().over(w)
-    c, h, lo = F.col(close_col), F.col(high_col), F.col(low_col)
-    v = F.col(volume_col)
-    pc, ph, pl = F.lag(c).over(w), F.lag(h).over(w), F.lag(lo).over(w)
+    ops = frame_ops()
+    names = [
+        "aroon_up", "aroon_down", "vortex_pos", "vortex_neg",
+        f"cmf{cmf_n}", "adi", f"eom{eom_n}", "uo", f"dpo{dpo_n}",
+        "ao", "wma9", "vpt", "cret", "ichi_span_a", "ichi_span_b",
+        "ichi_lagging", "kst", "ui14", "kst_sig",
+    ]
 
-    def frame(n):
-        return w.rowsBetween(-(n - 1), 0)
+    def kernel(cols):
+        c, h, lo = (cols.need(x) for x in (close_col, high_col, low_col))
+        v = cols[volume_col]
+        pc, ph, pl = ops.lag(c), ops.lag(h), ops.lag(lo)
+        fsum, guard, div = ops.fsum, ops.guard, ops.div
 
-    # aroon: position (0-based) of the first occurrence of the frame
-    # extreme, scaled; ta convention "bars since" is (n-1) - pos, we
-    # keep pos-based which is its mirror — documented engine semantics
-    highs = F.collect_list(h).over(frame(aroon_n))
-    lows = F.collect_list(lo).over(frame(aroon_n))
-    aroon_up = (
-        100.0
-        * (F.array_position(highs, F.array_max(highs)) - 1)
-        / (aroon_n - 1)
-    )
-    aroon_down = (
-        100.0
-        * (F.array_position(lows, F.array_min(lows)) - 1)
-        / (aroon_n - 1)
-    )
+        # aroon: position (0-based) of the first occurrence of the
+        # frame extreme, scaled; ta convention "bars since" is
+        # (n-1) - pos, we keep pos-based which is its mirror
+        a_up = 100.0 * ops.argext(h, aroon_n, np.argmax) / (aroon_n - 1)
+        a_dn = 100.0 * ops.argext(lo, aroon_n, np.argmin) / (aroon_n - 1)
 
-    tr = F.greatest(h - lo, F.abs(h - pc), F.abs(lo - pc))
-    vm_pos = F.coalesce(F.abs(h - pl), F.lit(0.0))
-    vm_neg = F.coalesce(F.abs(lo - ph), F.lit(0.0))
-
-    # money-flow volume; flat bars contribute 0
-    mfv = F.when(
-        h != lo, ((c - lo) - (h - c)) / (h - lo) * v
-    ).otherwise(F.lit(0.0))
-
-    emv = F.coalesce(
-        ((h + lo) / 2.0 - (ph + pl) / 2.0) * (h - lo)
-        / F.nullif(v, F.lit(0.0)),
-        F.lit(0.0),
-    )
-
-    bp = c - F.least(lo, pc)
-    tr_uo = F.greatest(h, pc) - F.least(lo, pc)
-
-    out = df.withColumns(
-        {
-            "__tr3": tr,
-            "__vp": vm_pos,
-            "__vn": vm_neg,
-            "__mfv": mfv,
-            "__emv": emv,
-            "__bp": bp,
-            "__truo": tr_uo,
-            "__mid": (h + lo) / 2.0,
-            "__vr": F.coalesce(
-                (c - pc) / F.nullif(pc, F.lit(0.0)) * v, F.lit(0.0)
-            ),
-        }
-    )
-    w2 = _base(part_col, idx_col)
-    rn2 = F.row_number().over(w2)
-
-    def f2(n):
-        return w2.rowsBetween(-(n - 1), 0)
-
-    def s(col, n):
-        return F.sum(col).over(f2(n))
-
-    uo_a7 = s("__bp", 7) / F.nullif(s("__truo", 7), F.lit(0.0))
-    uo_a14 = s("__bp", 14) / F.nullif(s("__truo", 14), F.lit(0.0))
-    uo_a28 = s("__bp", 28) / F.nullif(s("__truo", 28), F.lit(0.0))
-
-    # zero-denominator ROC taken as 0.0 (not NULL): the KST smoothing
-    # windows must stay null-free so the engine's windowed avg and the
-    # oracle's sequential fold see the same element set (Spark's avg
-    # would skip a NULL, a fold would propagate it)
-    roc = {
-        n: F.coalesce(
-            100.0
-            * (c / F.nullif(F.lag(c, n).over(w2), F.lit(0.0)) - 1.0),
-            F.lit(0.0),
+        tr = np.fmax(np.fmax(h - lo, np.abs(h - pc)), np.abs(lo - pc))
+        vm_pos = ops.coalesce(np.abs(h - pl), 0.0)
+        vm_neg = ops.coalesce(np.abs(lo - ph), 0.0)
+        # money-flow volume; flat bars contribute 0
+        mfv = np.where(h != lo, ((c - lo) - (h - c)) / (h - lo) * v, 0.0)
+        emv = ops.coalesce(
+            div(((h + lo) / 2.0 - (ph + pl) / 2.0) * (h - lo), v), 0.0
         )
-        for n in (10, 15, 20, 30)
-    }
-    out = out.withColumns(
-        {
-            "aroon_up": F.when(rn2 >= aroon_n, aroon_up),
-            "aroon_down": F.when(rn2 >= aroon_n, aroon_down),
-            "vortex_pos": F.when(
-                rn2 >= vortex_n + 1,
-                s("__vp", vortex_n)
-                / F.nullif(s("__tr3", vortex_n), F.lit(0.0)),
-            ),
-            "vortex_neg": F.when(
-                rn2 >= vortex_n + 1,
-                s("__vn", vortex_n)
-                / F.nullif(s("__tr3", vortex_n), F.lit(0.0)),
-            ),
-            f"cmf{cmf_n}": F.when(
-                rn2 >= cmf_n,
-                s("__mfv", cmf_n) / F.nullif(s(volume_col, cmf_n), F.lit(0.0)),
-            ),
-            "adi": F.sum("__mfv").over(
-                w2.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-            f"eom{eom_n}": F.when(
-                rn2 >= eom_n + 1, F.avg("__emv").over(f2(eom_n))
-            ),
-            "uo": F.when(
-                rn2 >= 28,
-                100.0 * (4.0 * uo_a7 + 2.0 * uo_a14 + uo_a28) / 7.0,
-            ),
-            f"dpo{dpo_n}": F.when(
-                rn2 >= dpo_n,
-                F.lag(c, dpo_n // 2 + 1).over(w2)
-                - F.avg(c).over(f2(dpo_n)),
-            ),
-            "__r10": roc[10],
-            "__r15": roc[15],
-            "__r20": roc[20],
-            "__r30": roc[30],
-            "ao": F.when(
-                rn2 >= 34, s("__mid", 5) / 5.0 - s("__mid", 34) / 34.0
-            ),
-            # flat weighted sum (not a fold): identical left-associated
-            # expression on the DuckDB side → bitwise
-            "wma9": F.when(
-                rn2 >= 9,
-                (
-                    9.0 * c
-                    + 8.0 * F.lag(c, 1).over(w2)
-                    + 7.0 * F.lag(c, 2).over(w2)
-                    + 6.0 * F.lag(c, 3).over(w2)
-                    + 5.0 * F.lag(c, 4).over(w2)
-                    + 4.0 * F.lag(c, 5).over(w2)
-                    + 3.0 * F.lag(c, 6).over(w2)
-                    + 2.0 * F.lag(c, 7).over(w2)
-                    + 1.0 * F.lag(c, 8).over(w2)
-                )
-                / 45.0,
-            ),
-            "vpt": F.sum("__vr").over(
-                w2.rowsBetween(Window.unboundedPreceding, 0)
-            ),
-            "cret": 100.0
-            * (
-                c
-                / F.nullif(
-                    F.first(c).over(
-                        w2.rowsBetween(Window.unboundedPreceding, 0)
-                    ),
-                    F.lit(0.0),
-                )
-                - 1.0
-            ),
-            # squared pct drawdown vs the 14-bar high; coalesce keeps the
-            # column null-free so the engine's frame sum and the oracle's
-            # fold see the same element set
-            "__uir2": F.coalesce(
-                (
-                    100.0
-                    * (c - F.max(c).over(f2(14)))
-                    / F.nullif(F.max(c).over(f2(14)), F.lit(0.0))
-                )
-                * (
-                    100.0
-                    * (c - F.max(c).over(f2(14)))
-                    / F.nullif(F.max(c).over(f2(14)), F.lit(0.0))
-                ),
-                F.lit(0.0),
-            ),
-            "ichi_span_a": F.lag(
-                (F.max(h).over(f2(9)) + F.min(lo).over(f2(9))) / 2.0 / 2.0
-                + (F.max(h).over(f2(26)) + F.min(lo).over(f2(26))) / 2.0 / 2.0,
-                26,
-            ).over(w2),
-            "ichi_span_b": F.when(
-                rn2 >= 52 + 26,
-                F.lag(
-                    (F.max(h).over(f2(52)) + F.min(lo).over(f2(52))) / 2.0, 26
-                ).over(w2),
-            ),
-            "ichi_lagging": F.lead(c, 26).over(w2),
+        bp = c - np.fmin(lo, pc)
+        tr_uo = np.fmax(h, pc) - np.fmin(lo, pc)
+        mid = (h + lo) / 2.0
+        vr = ops.coalesce(div(c - pc, pc) * v, 0.0)
+        uo_a = {n: div(fsum(bp, n), fsum(tr_uo, n)) for n in (7, 14, 28)}
+        trs = fsum(tr, vortex_n)
+        # zero-denominator ROC taken as 0.0 (not NULL): the KST
+        # smoothing frames stay null-free, as in the oracle's fold
+        roc = {
+            n: ops.coalesce(100.0 * (div(c, ops.lag(c, n)) - 1.0), 0.0)
+            for n in (10, 15, 20, 30)
         }
-    )
-    w3 = _base(part_col, idx_col)
-    rn3 = F.row_number().over(w3)
+        wma = 9.0 * c
+        for k in range(1, 9):
+            wma = wma + (9.0 - k) * ops.lag(c, k)
+        # squared pct drawdown vs the 14-bar high; coalesce keeps the
+        # column null-free so the frame sum sees every bar
+        mx = ops.fmax(c, 14)
+        dd = div(100.0 * (c - mx), mx)
+        uir2 = ops.coalesce(dd * dd, 0.0)
+        span_a = (ops.fmax(h, 9) + ops.fmin(lo, 9)) / 2.0 / 2.0 + (
+            ops.fmax(h, 26) + ops.fmin(lo, 26)
+        ) / 2.0 / 2.0
+        span_b = (ops.fmax(h, 52) + ops.fmin(lo, 52)) / 2.0
+        kst = guard(
+            1.0 * ops.favg(roc[10], 10)
+            + 2.0 * ops.favg(roc[15], 10)
+            + 3.0 * ops.favg(roc[20], 10)
+            + 4.0 * ops.favg(roc[30], 15),
+            45,
+        )
+        return dict(zip(names, (
+            guard(a_up, aroon_n),
+            guard(a_dn, aroon_n),
+            guard(div(fsum(vm_pos, vortex_n), trs), vortex_n + 1),
+            guard(div(fsum(vm_neg, vortex_n), trs), vortex_n + 1),
+            guard(div(fsum(mfv, cmf_n), fsum(v, cmf_n)), cmf_n),
+            ops.cumsum(mfv),
+            guard(ops.favg(emv, eom_n), eom_n + 1),
+            guard(
+                100.0 * (4.0 * uo_a[7] + 2.0 * uo_a[14] + uo_a[28]) / 7.0,
+                28,
+            ),
+            guard(ops.lag(c, dpo_n // 2 + 1) - ops.favg(c, dpo_n), dpo_n),
+            guard(fsum(mid, 5) / 5.0 - fsum(mid, 34) / 34.0, 34),
+            guard(wma / 45.0, 9),
+            ops.cumsum(vr),
+            100.0 * (div(c, np.full(c.size, c[0] if c.size else 0.0)) - 1.0),
+            guard(ops.lag(span_a, 26), 26 + 26),
+            guard(ops.lag(span_b, 26), 52 + 26),
+            ops.lead(c, 26),
+            kst,
+            guard(np.sqrt(fsum(uir2, 14) / 14.0), 14),
+            guard(ops.favg(kst, 9), 53),
+        )))
 
-    def f3(n):
-        return w3.rowsBetween(-(n - 1), 0)
-
-    kst = (
-        1.0 * F.avg("__r10").over(f3(10))
-        + 2.0 * F.avg("__r15").over(f3(10))
-        + 3.0 * F.avg("__r20").over(f3(10))
-        + 4.0 * F.avg("__r30").over(f3(15))
-    )
-    out = out.withColumn("kst", F.when(rn3 >= 45, kst))
-    out = out.withColumn(
-        "ui14",
-        F.when(rn3 >= 14, F.sqrt(F.sum("__uir2").over(f3(14)) / 14.0)),
-    )
-    w4 = _base(part_col, idx_col)
-    out = out.withColumn(
-        "kst_sig",
-        F.when(
-            F.row_number().over(w4) >= 53,
-            F.avg("kst").over(w4.rowsBetween(-8, 0)),
-        ),
-    )
-    # span_a guard: conv needs 9 bars, base 26, displaced 26
-    out = out.withColumn(
-        "ichi_span_a",
-        F.when(F.row_number().over(w4) >= 26 + 26, F.col("ichi_span_a")),
-    )
-    return out.drop(
-        "__tr3", "__vp", "__vn", "__mfv", "__emv", "__bp", "__truo",
-        "__r10", "__r15", "__r20", "__r30", "__mid", "__vr", "__uir2",
-    )
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def recursive_battery_arrow(
@@ -879,10 +691,9 @@ def recursive_battery_arrow(
     idx_col: str = "time_idx",
     derived_tail: bool = False,
 ) -> DataFrame:
-    """EVERY recursive (infinite-memory) indicator in ONE Arrow pass per
-    series — each extra applyInPandas round-trip costs a shuffle plus an
-    Arrow serialization, so all the chained recursions advance together
-    in a single Python loop:
+    """EVERY recursive (infinite-memory) indicator, a kernel on the
+    per-series pass (so it shares one pass with the frame batteries and
+    Savitzky–Golay):
 
     - ``ema12``/``ema26``/``macd``/``macd_signal``/``macd_hist``
     - ``rsi14`` (Wilder ewm over gains/losses)
@@ -901,8 +712,8 @@ def recursive_battery_arrow(
     - ``mass_idx`` (Mass Index — 25-bar sum of EMA9(high−low) /
       EMA9(EMA9(high−low)); partial frames emit from the first bar)
     - ``kama`` (Kaufman adaptive MA 10/2/30 — per-step smoothing
-      constant from the efficiency ratio, computed natively; only the
-      recursion lives in Python; er taken as 0 for the first 10 bars)
+      constant from the efficiency ratio; er taken as 0 for the first
+      10 bars)
     - ``nvi`` (Negative Volume Index, base 1000 — compounds pct-change
       only on volume-down bars)
     - ``stoch_rsi`` (Stochastic RSI — position of RSI-14 in its 14-bar
@@ -922,82 +733,40 @@ def recursive_battery_arrow(
       while the emitted ``ppo``/``pvo`` stay null there, matching the
       oracle's CASE arms exactly)
 
-    With ``derived_tail=True`` the pass ALSO emits the ta derived-
+    With ``derived_tail=True`` the kernel ALSO emits the ta derived-
     column tail (``ppo_hist``/``pvo_hist``, ``kc_width``/``kc_pband``,
     ``stochrsi_k``/``stochrsi_d``, ``psar_up``/``psar_down`` +
     flip indicators). These are frame-expressible (see
     :func:`add_indicators5`, the composable native twin, cross-pinned
-    equal in tests), but an ``applyInPandas`` output carries no
-    partitioning metadata, so a downstream Window re-shuffles the
-    whole battery frame just to re-group what this loop already holds
-    sorted in memory — in-pass emission keeps the entire indicator
-    pipeline at ONE shuffle. Arithmetic matches the native twin
+    equal in tests), but a Window over the pass's output would
+    re-shuffle the whole battery frame just to re-group what the pass
+    already holds sorted in memory. Arithmetic matches the native twin
     bitwise (the 3-SMAs fold ``((0+x1)+x2)+x3`` in frame order,
     exactly Spark's no-retraction sliding-sum order and the oracle's
     ``list_reduce`` fold).
 
-    Inputs must be gap-filled (null-free close/high/low/volume). The
-    lag-derived inputs (true range, gains, ±DM, raw force) are computed
-    NATIVELY with window functions before the pass — only the
-    recursions live in Python. Every recursion is ``y=(1-a)y+ax``
-    seeded with its input's first value, operand order identical to the
-    DuckDB oracle's staged sequential folds (bitwise-reproducible).
+    Inputs must be gap-filled: a NULL close/high/low/volume raises
+    ``ValueError`` naming the column and the series (a recursion would
+    carry it through the rest of the series). Every recursion is
+    ``y=(1-a)y+ax`` seeded with its input's first value, operand order
+    identical to the DuckDB oracle's staged sequential folds
+    (bitwise-reproducible); the lag-derived inputs and the emitted
+    arithmetic are NumPy expressions in the same operand order.
     """
-    w = _base(part_col, idx_col)
-    c = F.col(close_col)
-    h, lo, v = F.col(high_col), F.col(low_col), F.col(volume_col)
-    pc = F.lag(c).over(w)
-    d = c - pc
-    up = h - F.lag(h).over(w)
-    dn = F.lag(lo).over(w) - lo
-    rn = F.row_number().over(w)
-    src = df.withColumns(
-        {
-            "__tr": F.greatest(h - lo, F.abs(h - pc), F.abs(lo - pc)),
-            "__gain": F.greatest(d, F.lit(0.0)),
-            "__loss": F.greatest(-d, F.lit(0.0)),
-            "__pdm": F.when((up > dn) & (up > 0), up).otherwise(F.lit(0.0)),
-            "__ndm": F.when((dn > up) & (dn > 0), dn).otherwise(F.lit(0.0)),
-            "__fi": F.coalesce(d * v, F.lit(0.0)),
-            "__mom": F.coalesce(d, F.lit(0.0)),
-            "__amom": F.abs(F.coalesce(d, F.lit(0.0))),
-            "__hl": h - lo,
-            "__nvif": F.coalesce(v < F.lag(v).over(w), F.lit(False)),
-            "__nvir": F.coalesce(
-                (c - pc) / F.nullif(pc, F.lit(0.0)), F.lit(0.0)
-            ),
-            "__rn": rn,
-            "__k10": F.abs(c - F.lag(c, 10).over(w)),
-        }
-    )
-    # KAMA smoothing constant, fully native: efficiency ratio over the
-    # 10-bar abs-move sum, squared-blended between the fast (2/3) and
-    # slow (2/31) constants; er is 0 for the first 10 bars so the seeded
-    # recursion warms up at the slow constant on both engines
-    kden = F.sum("__amom").over(w.rowsBetween(-9, 0))
-    er = F.when(
-        (F.col("__rn") > 10) & (kden != 0.0), F.col("__k10") / kden
-    ).otherwise(F.lit(0.0))
-    sc_b = er * (2.0 / 3.0 - 2.0 / 31.0) + 2.0 / 31.0
-    src = src.withColumn("__sc", sc_b * sc_b)
-
-    out_cols = (
+    ops = frame_ops()
+    names = [
         "ema12", "ema26", "macd", "macd_signal", "macd_hist", "rsi14",
         "atr14", "trix15", "ppo", "kelt_mid", "kelt_upper", "kelt_lower",
         "adx14", "di_pos14", "di_neg14", "force13",
         "tsi", "pvo", "mass_idx", "kama", "nvi", "stoch_rsi",
         "psar", "psar_dir", "stc", "ppo_signal", "pvo_signal",
-    )
+    ]
     if derived_tail:
-        out_cols = out_cols + (
+        names += [
             "ppo_hist", "pvo_hist", "kc_width", "kc_pband",
             "stochrsi_k", "stochrsi_d", "psar_up", "psar_down",
             "psar_up_ind", "psar_down_ind",
-        )
-    fields = list(src.schema.fields) + [
-        StructField(cn, DoubleType()) for cn in out_cols
-    ]
-    schema = StructType(fields)
+        ]
 
     a12, a26, a9 = 2.0 / 13.0, 2.0 / 27.0, 2.0 / 10.0
     aw = 1.0 / 14.0
@@ -1007,224 +776,162 @@ def recursive_battery_arrow(
     a25t, a13t = 2.0 / 26.0, 2.0 / 14.0
     am9 = 2.0 / 10.0
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col)
-        xs = pdf[close_col].to_numpy()
-        highs = pdf[high_col].to_numpy()
-        lows = pdf[low_col].to_numpy()
-        trs = pdf["__tr"].to_numpy()
-        gains = pdf["__gain"].to_numpy()
-        losses = pdf["__loss"].to_numpy()
-        pdms = pdf["__pdm"].to_numpy()
-        ndms = pdf["__ndm"].to_numpy()
-        fis = pdf["__fi"].to_numpy()
-        moms = pdf["__mom"].to_numpy()
-        amoms = pdf["__amom"].to_numpy()
-        hls = pdf["__hl"].to_numpy()
-        vols = pdf[volume_col].to_numpy()
-        nvifs = pdf["__nvif"].to_numpy()
-        nvirs = pdf["__nvir"].to_numpy()
-        scs = pdf["__sc"].to_numpy()
-        n = len(xs)
-        res = {cn: [None] * n for cn in out_cols}
-        e12 = e26 = sig = ag = al = eatr = None
-        e1 = e2 = e3 = None
-        ekel = ekatr = spdm = sndm = adx = efi = None
-        ms1 = ms2 = as1 = as2 = None
-        ev12 = ev26 = meh = mehh = kama = nvi = None
-        p_sar = p_ep = p_af = None
-        p_up = True
-        d1 = stc = None
-        pposig = pvosig = None
-        last_up = None
-        ks: list = []
-        ratios: list[float] = []
-        rsis: list[float] = []
-        macds: list[float] = []
-        d1s: list[float] = []
-        for i in range(n):
-            x = float(xs[i])
-            t = float(trs[i])
-            e12 = x if e12 is None else (1.0 - a12) * e12 + a12 * x
-            e26 = x if e26 is None else (1.0 - a26) * e26 + a26 * x
-            m = e12 - e26
-            sig = m if sig is None else (1.0 - a9) * sig + a9 * m
-            g, ls = float(gains[i]), float(losses[i])
-            ag = g if ag is None else (1.0 - aw) * ag + aw * g
-            al = ls if al is None else (1.0 - aw) * al + aw * ls
-            eatr = t if eatr is None else (1.0 - aw) * eatr + aw * t
-            e1 = x if e1 is None else (1.0 - a15) * e1 + a15 * x
-            e2 = e1 if e2 is None else (1.0 - a15) * e2 + a15 * e1
-            prev_e3 = e3
-            e3 = e2 if e3 is None else (1.0 - a15) * e3 + a15 * e2
-            ekel = x if ekel is None else (1.0 - ak) * ekel + ak * x
-            ekatr = t if ekatr is None else (1.0 - aka) * ekatr + aka * t
-            p, q = float(pdms[i]), float(ndms[i])
-            spdm = p if spdm is None else (1.0 - aw) * spdm + aw * p
-            sndm = q if sndm is None else (1.0 - aw) * sndm + aw * q
-            dp = 100.0 * spdm / eatr if eatr != 0.0 else 0.0
-            dq = 100.0 * sndm / eatr if eatr != 0.0 else 0.0
-            dx = 100.0 * abs(dp - dq) / (dp + dq) if dp + dq != 0.0 else 0.0
-            adx = dx if adx is None else (1.0 - aw) * adx + aw * dx
-            fi = float(fis[i])
-            efi = fi if efi is None else (1.0 - af) * efi + af * fi
-            mo, am = float(moms[i]), float(amoms[i])
-            ms1 = mo if ms1 is None else (1.0 - a25t) * ms1 + a25t * mo
-            as1 = am if as1 is None else (1.0 - a25t) * as1 + a25t * am
-            ms2 = ms1 if ms2 is None else (1.0 - a13t) * ms2 + a13t * ms1
-            as2 = as1 if as2 is None else (1.0 - a13t) * as2 + a13t * as1
-            vo = float(vols[i])
-            ev12 = vo if ev12 is None else (1.0 - a12) * ev12 + a12 * vo
-            ev26 = vo if ev26 is None else (1.0 - a26) * ev26 + a26 * vo
-            ppov = 100.0 * (e12 - e26) / e26 if e26 != 0.0 else 0.0
-            pposig = (
-                ppov if pposig is None else (1.0 - a9) * pposig + a9 * ppov
-            )
-            pvov = 100.0 * (ev12 - ev26) / ev26 if ev26 != 0.0 else 0.0
-            pvosig = (
-                pvov if pvosig is None else (1.0 - a9) * pvosig + a9 * pvov
-            )
-            hlv = float(hls[i])
-            meh = hlv if meh is None else (1.0 - am9) * meh + am9 * hlv
-            mehh = meh if mehh is None else (1.0 - am9) * mehh + am9 * meh
-            ratios.append(meh / mehh if mehh != 0.0 else 0.0)
-            acc = 0.0
-            for r in ratios[max(0, i - 24) : i + 1]:
-                acc = acc + r
-            sc = float(scs[i])
-            kama = x if kama is None else kama + sc * (x - kama)
-            if nvi is None:
-                nvi = 1000.0
-            elif bool(nvifs[i]):
-                nvi = nvi * (1.0 + float(nvirs[i]))
-            # Parabolic SAR state machine — arithmetic written in the
-            # exact operand order of the oracle's struct fold so the
-            # floats match bitwise
-            hi, lw = float(highs[i]), float(lows[i])
-            if p_sar is None:
-                p_sar, p_ep, p_af, p_up = lw, hi, 0.02, True
-            else:
-                base = p_sar + p_af * (p_ep - p_sar)
-                if p_up:
-                    pl1 = float(lows[i - 1])
-                    pl2 = float(lows[i - 2]) if i >= 2 else pl1
-                    s1 = min(base, pl1, pl2)
-                    if lw < s1:
-                        p_sar, p_ep, p_af, p_up = p_ep, lw, 0.02, False
-                    else:
-                        if hi > p_ep:
-                            p_af = min(p_af + 0.02, 0.2)
-                        p_sar, p_ep = s1, max(p_ep, hi)
-                else:
-                    ph1 = float(highs[i - 1])
-                    ph2 = float(highs[i - 2]) if i >= 2 else ph1
-                    s1 = max(base, ph1, ph2)
-                    if hi > s1:
-                        p_sar, p_ep, p_af, p_up = p_ep, hi, 0.02, True
-                    else:
-                        if lw < p_ep:
-                            p_af = min(p_af + 0.02, 0.2)
-                        p_sar, p_ep = s1, min(p_ep, lw)
-            # Schaff Trend Cycle over the battery's 12/26 MACD:
-            # stoch(10) -> ema(.5) -> stoch(10) -> ema(.5)
-            macds.append(m)
-            w10 = macds[max(0, i - 9) : i + 1]
-            mnm, mxm = min(w10), max(w10)
-            k1 = 100.0 * (m - mnm) / (mxm - mnm) if mxm != mnm else 50.0
-            d1 = k1 if d1 is None else (1.0 - 0.5) * d1 + 0.5 * k1
-            d1s.append(d1)
-            w10d = d1s[max(0, i - 9) : i + 1]
-            mnd, mxd = min(w10d), max(w10d)
-            k2 = 100.0 * (d1 - mnd) / (mxd - mnd) if mxd != mnd else 50.0
-            stc = k2 if stc is None else (1.0 - 0.5) * stc + 0.5 * k2
-            res["ema12"][i] = e12
-            res["ema26"][i] = e26
-            res["macd"][i] = m
-            res["macd_signal"][i] = sig
-            res["macd_hist"][i] = m - sig
-            res["rsi14"][i] = (
-                100.0 if al == 0.0 else 100.0 - 100.0 / (1.0 + ag / al)
-            )
-            res["atr14"][i] = eatr
-            if prev_e3 is not None and prev_e3 != 0.0:
-                res["trix15"][i] = 100.0 * (e3 - prev_e3) / prev_e3
-            if e26 != 0.0:
-                res["ppo"][i] = ppov
-            res["ppo_signal"][i] = pposig
-            res["kelt_mid"][i] = ekel
-            res["kelt_upper"][i] = ekel + 2.0 * ekatr
-            res["kelt_lower"][i] = ekel - 2.0 * ekatr
-            res["adx14"][i] = adx
-            res["di_pos14"][i] = dp
-            res["di_neg14"][i] = dq
-            res["force13"][i] = efi
-            if as2 != 0.0:
-                res["tsi"][i] = 100.0 * ms2 / as2
-            if ev26 != 0.0:
-                res["pvo"][i] = pvov
-            res["pvo_signal"][i] = pvosig
-            res["mass_idx"][i] = acc
-            res["kama"][i] = kama
-            res["nvi"][i] = nvi
-            res["psar"][i] = p_sar
-            res["psar_dir"][i] = 1.0 if p_up else -1.0
-            res["stc"][i] = stc
-            cur_rsi = res["rsi14"][i]
-            rsis.append(cur_rsi)
-            if i >= 13:
-                win = rsis[i - 13 : i + 1]
-                mn, mx = min(win), max(win)
-                if mx != mn:
-                    res["stoch_rsi"][i] = (cur_rsi - mn) / (mx - mn)
-            if derived_tail:
-                # frame-order 3-SMA folds + channel/split arithmetic,
-                # bitwise-equal to the native add_indicators5 twin
-                sr3 = res["stoch_rsi"][max(0, i - 2) : i + 1]
-                if i >= 2 and all(s is not None for s in sr3):
-                    res["stochrsi_k"][i] = (
-                        ((0.0 + sr3[0]) + sr3[1]) + sr3[2]
-                    ) / 3.0
-                ks.append(res["stochrsi_k"][i])
-                k3 = ks[max(0, i - 2) : i + 1]
-                if i >= 2 and all(s is not None for s in k3):
-                    res["stochrsi_d"][i] = (
-                        ((0.0 + k3[0]) + k3[1]) + k3[2]
-                    ) / 3.0
-                kub = ekel + 2.0 * ekatr
-                klb = ekel - 2.0 * ekatr
-                kw4 = kub - klb
-                if ekel != 0.0:
-                    res["kc_width"][i] = kw4 / ekel * 100.0
-                if kw4 != 0.0:
-                    res["kc_pband"][i] = (x - klb) / kw4
-                if p_up:
-                    res["psar_up"][i] = p_sar
-                else:
-                    res["psar_down"][i] = p_sar
-                res["psar_up_ind"][i] = (
-                    1.0 if (p_up and last_up is False) else 0.0
-                )
-                res["psar_down_ind"][i] = (
-                    1.0 if ((not p_up) and last_up is True) else 0.0
-                )
-                if e26 != 0.0:
-                    res["ppo_hist"][i] = ppov - pposig
-                if ev26 != 0.0:
-                    res["pvo_hist"][i] = pvov - pvosig
-            last_up = p_up
-        for cn in out_cols:
-            pdf[cn] = res[cn]
-        return pdf
+    def kama_loop(x, sc):
+        xs, scs = x.tolist(), sc.tolist()
+        out = [xs[0]]
+        for i in range(1, len(xs)):
+            k = out[-1]
+            out.append(k + scs[i] * (xs[i] - k))
+        return out
 
-    return (
-        src.groupBy(part_col)
-        .applyInPandas(fn, schema)
-        .drop(
-            "__tr", "__gain", "__loss", "__pdm", "__ndm", "__fi",
-            "__mom", "__amom", "__hl", "__nvif", "__nvir", "__rn",
-            "__k10", "__sc",
+    def nvi_loop(down, r):
+        out = [1000.0]
+        for i in range(1, len(down)):
+            out.append(out[-1] * (1.0 + r[i]) if down[i] else out[-1])
+        return out
+
+    def psar_loop(highs, lows):
+        # Wilder's state machine, arithmetic in the exact operand order
+        # of the oracle's struct fold so the floats match bitwise
+        n = len(highs)
+        sar, up = [0.0] * n, [True] * n
+        p_sar, p_ep, p_af, p_up = lows[0], highs[0], 0.02, True
+        sar[0] = p_sar
+        for i in range(1, n):
+            hi, lw = highs[i], lows[i]
+            base = p_sar + p_af * (p_ep - p_sar)
+            if p_up:
+                pl1 = lows[i - 1]
+                pl2 = lows[i - 2] if i >= 2 else pl1
+                s1 = min(base, pl1, pl2)
+                if lw < s1:
+                    p_sar, p_ep, p_af, p_up = p_ep, lw, 0.02, False
+                else:
+                    if hi > p_ep:
+                        p_af = min(p_af + 0.02, 0.2)
+                    p_sar, p_ep = s1, max(p_ep, hi)
+            else:
+                ph1 = highs[i - 1]
+                ph2 = highs[i - 2] if i >= 2 else ph1
+                s1 = max(base, ph1, ph2)
+                if hi > s1:
+                    p_sar, p_ep, p_af, p_up = p_ep, hi, 0.02, True
+                else:
+                    if lw < p_ep:
+                        p_af = min(p_af + 0.02, 0.2)
+                    p_sar, p_ep = s1, min(p_ep, lw)
+            sar[i], up[i] = p_sar, p_up
+        return np.array(sar), np.array(up)
+
+    def kernel(cols):
+        c, h, lo, v = (
+            cols.need(x) for x in (close_col, high_col, low_col, volume_col)
         )
-    )
+        n = c.size
+        ewm, where, nan = ops.ewm, np.where, np.nan
+        pc = ops.lag(c)
+        d = c - pc
+        tr = np.fmax(np.fmax(h - lo, np.abs(h - pc)), np.abs(lo - pc))
+        up_m, dn_m = h - ops.lag(h), ops.lag(lo) - lo
+        pdm = where((up_m > dn_m) & (up_m > 0), up_m, 0.0)
+        ndm = where((dn_m > up_m) & (dn_m > 0), dn_m, 0.0)
+        mom = ops.coalesce(d, 0.0)
+        amom = np.abs(mom)
+        # KAMA smoothing constant: efficiency ratio over the 10-bar
+        # abs-move sum, squared-blended between the fast (2/3) and slow
+        # (2/31) constants; er is 0 for the first 10 bars so the seeded
+        # recursion warms up at the slow constant
+        kden = ops.fsum(amom, 10)
+        k10 = np.abs(c - ops.lag(c, 10))
+        er = where(
+            (np.arange(1, n + 1) > 10) & (kden != 0.0), k10 / kden, 0.0
+        )
+        sc_b = er * (2.0 / 3.0 - 2.0 / 31.0) + 2.0 / 31.0
+
+        e12, e26 = ewm(c, a12), ewm(c, a26)
+        m = e12 - e26
+        sig = ewm(m, a9)
+        ag, al = ewm(np.fmax(d, 0.0), aw), ewm(np.fmax(-d, 0.0), aw)
+        eatr = ewm(tr, aw)
+        e3 = ewm(ewm(ewm(c, a15), a15), a15)
+        ekel, ekatr = ewm(c, ak), ewm(tr, aka)
+        spdm, sndm = ewm(pdm, aw), ewm(ndm, aw)
+        ms2 = ewm(ewm(mom, a25t), a13t)
+        as2 = ewm(ewm(amom, a25t), a13t)
+        ev12, ev26 = ewm(v, a12), ewm(v, a26)
+        meh = ewm(h - lo, am9)
+        mehh = ewm(meh, am9)
+        dp = where(eatr != 0.0, 100.0 * spdm / eatr, 0.0)
+        dq = where(eatr != 0.0, 100.0 * sndm / eatr, 0.0)
+        dx = where(dp + dq != 0.0, 100.0 * np.abs(dp - dq) / (dp + dq), 0.0)
+        ppov = where(e26 != 0.0, 100.0 * (e12 - e26) / e26, 0.0)
+        pvov = where(ev26 != 0.0, 100.0 * (ev12 - ev26) / ev26, 0.0)
+        ratio = where(mehh != 0.0, meh / mehh, 0.0)
+        rsi = where(al == 0.0, 100.0, 100.0 - 100.0 / (1.0 + ag / al))
+        prev_e3 = ops.lag(e3)
+        trix = where(
+            prev_e3 != 0.0, 100.0 * (e3 - prev_e3) / prev_e3, nan
+        )
+        tsi = where(as2 != 0.0, 100.0 * ms2 / as2, nan)
+        pposig, pvosig = ewm(ppov, a9), ewm(pvov, a9)
+        kama = np.array(kama_loop(c, sc_b * sc_b))
+        nvi = np.array(
+            nvi_loop(
+                (v < ops.lag(v)).tolist(),
+                ops.coalesce(ops.div(c - pc, pc), 0.0).tolist(),
+            )
+        )
+        psar, p_up = psar_loop(h.tolist(), lo.tolist())
+
+        def stoch(x):
+            # position of x in its trailing 10-bar range (partial
+            # frames at the start); the 50.0 midpoint on a flat range
+            mn, mx = ops.fmin(x, 10), ops.fmax(x, 10)
+            return where(mx != mn, 100.0 * (x - mn) / (mx - mn), 50.0)
+
+        # Schaff Trend Cycle: stoch(10) -> ema(.5) -> stoch(10) -> ema(.5)
+        stc = ewm(stoch(ewm(stoch(m), 0.5)), 0.5)
+        mn14, mx14 = ops.fmin(rsi, 14), ops.fmax(rsi, 14)
+        stoch_rsi = ops.guard(
+            where(mx14 != mn14, (rsi - mn14) / (mx14 - mn14), nan), 14
+        )
+        kub, klb = ekel + 2.0 * ekatr, ekel - 2.0 * ekatr
+        out = dict(zip(names, (
+            e12, e26, m, sig, m - sig, rsi, eatr, trix,
+            where(e26 != 0.0, ppov, nan),
+            ekel, kub, klb, ewm(dx, aw), dp, dq,
+            ewm(ops.coalesce(d * v, 0.0), af),
+            tsi,
+            where(ev26 != 0.0, pvov, nan),
+            ops.fsum(ratio, 25), kama, nvi, stoch_rsi,
+            psar, where(p_up, 1.0, -1.0), stc, pposig, pvosig,
+        )))
+        if derived_tail:
+            # frame-order 3-SMA folds + channel/split arithmetic,
+            # bitwise-equal to the native add_indicators5 twin
+            def sma3(x):
+                lag1, lag2 = ops.lag(x), ops.lag(x, 2)
+                return ops.guard(((0.0 + lag2) + lag1 + x) / 3.0, 3)
+
+            srk = sma3(stoch_rsi)
+            kw4 = kub - klb
+            flip = np.zeros(n)
+            flip[1:] = p_up[1:] != p_up[:-1]
+            out.update(zip(names[27:], (
+                where(e26 != 0.0, ppov - pposig, nan),
+                where(ev26 != 0.0, pvov - pvosig, nan),
+                where(ekel != 0.0, kw4 / ekel * 100.0, nan),
+                where(kw4 != 0.0, (c - klb) / kw4, nan),
+                srk,
+                sma3(srk),
+                where(p_up, psar, nan),
+                where(p_up, nan, psar),
+                where(p_up, flip, 0.0),
+                where(p_up, 0.0, flip),
+            )))
+        return out
+
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def add_indicators4(
@@ -1240,16 +947,14 @@ def add_indicators4(
     aroon_n: int = 25,
     vortex_n: int = 14,
 ) -> DataFrame:
-    """Fourth frame-expressible battery — the ``ta`` package's
-    derived-column tail (reference core/data/preprocess.py:11-16
-    ``add_all_ta_features`` emits these beside the bases the earlier
-    batteries cover): band width / %B / band-cross indicators, channel
-    width/percent, oscillator differentials, the raw ease-of-movement
-    value, and percent returns. One shared Window spec (same
-    partitioning + ordering as add_indicators/3 — a composed pipeline
-    still plans a single sort); every column is arithmetic over the
-    SAME base expression trees the green batteries use, so
-    engine/oracle parity carries over unchanged:
+    """Fourth battery — the ``ta`` package's derived-column tail
+    (reference core/data/preprocess.py:11-16 ``add_all_ta_features``
+    emits these beside the bases the earlier batteries cover): band
+    width / %B / band-cross indicators, channel width/percent,
+    oscillator differentials, the raw ease-of-movement value, and
+    percent returns. A kernel on the per-series pass; every column is
+    arithmetic over the SAME base quantities the other batteries use,
+    so engine/oracle parity carries over unchanged:
 
     - ``dr`` / ``dlr``: percent daily return / log return
     - ``em``: raw ease-of-movement (``eom14`` is its 14-SMA)
@@ -1258,80 +963,49 @@ def add_indicators4(
     - ``don_width`` / ``don_pband``: Donchian channel analogues
     - ``aroon_ind``: aroon_up − aroon_down
     - ``vortex_diff``: vortex_pos − vortex_neg
+
+    Close/high/low must be non-null (a NULL raises ``ValueError``);
+    ``em`` is NULL where the volume is NULL or zero.
     """
-    w = _base(part_col, idx_col)
-    rn = F.row_number().over(w)
-    c, h, lo, v = (
-        F.col(x) for x in (close_col, high_col, low_col, volume_col)
-    )
-    prev = F.lag(c).over(w)
-    ph, pl = F.lag(h).over(w), F.lag(lo).over(w)
+    ops = frame_ops()
+    names = [
+        "dr", "dlr", "em", "bb_width", "bb_pband", "bb_hi", "bb_li",
+        "don_width", "don_pband", "aroon_ind", "vortex_diff",
+    ]
 
-    bb_frame = w.rowsBetween(-(bb_n - 1), 0)
-    mid = F.avg(c).over(bb_frame)
-    sd = F.stddev_pop(c).over(bb_frame)
-    up, lb = mid + 2 * sd, mid - 2 * sd
-    don_frame = w.rowsBetween(-(don_n - 1), 0)
-    du, dl = F.max(h).over(don_frame), F.min(lo).over(don_frame)
+    def kernel(cols):
+        c, h, lo = (cols.need(x) for x in (close_col, high_col, low_col))
+        v = cols[volume_col]
+        guard, div = ops.guard, ops.div
+        prev, ph, pl = ops.lag(c), ops.lag(h), ops.lag(lo)
+        mid, sd = ops.favg(c, bb_n), ops.fstd(c, bb_n)
+        up, lb = mid + 2.0 * sd, mid - 2.0 * sd
+        du, dl = ops.fmax(h, don_n), ops.fmin(lo, don_n)
+        a_up = 100.0 * ops.argext(h, aroon_n, np.argmax) / (aroon_n - 1)
+        a_dn = 100.0 * ops.argext(lo, aroon_n, np.argmin) / (aroon_n - 1)
+        tr = np.fmax(np.fmax(h - lo, np.abs(h - prev)), np.abs(lo - prev))
+        trs = ops.fsum(tr, vortex_n)
+        vpos = div(ops.fsum(ops.coalesce(np.abs(h - pl), 0.0), vortex_n), trs)
+        vneg = div(ops.fsum(ops.coalesce(np.abs(lo - ph), 0.0), vortex_n), trs)
+        em = div(((h + lo) / 2.0 - (ph + pl) / 2.0) * (h - lo), v)
+        dlr = np.where(
+            (c > 0) & (prev > 0), 100.0 * ops.log(c / prev), np.nan
+        )
+        return dict(zip(names, (
+            100.0 * (div(c, prev) - 1.0),
+            dlr,
+            guard(em, 2),
+            guard(div(up - lb, mid) * 100.0, bb_n),
+            guard(div(c - lb, up - lb), bb_n),
+            guard(np.where(c > up, 1.0, 0.0), bb_n),
+            guard(np.where(c < lb, 1.0, 0.0), bb_n),
+            guard(div(du - dl, (du + dl) / 2.0) * 100.0, don_n),
+            guard(div(c - dl, du - dl), don_n),
+            guard(a_up - a_dn, aroon_n),
+            guard(vpos - vneg, vortex_n + 1),
+        )))
 
-    ar_frame = w.rowsBetween(-(aroon_n - 1), 0)
-    highs = F.collect_list(h).over(ar_frame)
-    lows = F.collect_list(lo).over(ar_frame)
-    a_up = (
-        100.0
-        * (F.array_position(highs, F.array_max(highs)) - 1)
-        / (aroon_n - 1)
-    )
-    a_dn = (
-        100.0
-        * (F.array_position(lows, F.array_min(lows)) - 1)
-        / (aroon_n - 1)
-    )
-
-    tr = F.greatest(h - lo, F.abs(h - prev), F.abs(lo - prev))
-    vp = F.coalesce(F.abs(h - pl), F.lit(0.0))
-    vn = F.coalesce(F.abs(lo - ph), F.lit(0.0))
-    em = (
-        ((h + lo) / 2.0 - (ph + pl) / 2.0)
-        * (h - lo)
-        / F.nullif(v, F.lit(0.0))
-    )
-    out = df.withColumns({"__tr4": tr, "__vp4": vp, "__vn4": vn})
-    w2 = _base(part_col, idx_col)
-    rn2 = F.row_number().over(w2)
-    vf = w2.rowsBetween(-(vortex_n - 1), 0)
-    trs = F.nullif(F.sum("__tr4").over(vf), F.lit(0.0))
-    vpos = F.sum("__vp4").over(vf) / trs
-    vneg = F.sum("__vn4").over(vf) / trs
-    prev_nz = F.nullif(prev, F.lit(0.0))
-    return out.withColumns(
-        {
-            "dr": 100.0 * (c / prev_nz - 1.0),
-            "dlr": F.when((c > 0) & (prev > 0), 100.0 * F.log(c / prev)),
-            "em": F.when(rn >= 2, em),
-            "bb_width": F.when(
-                rn >= bb_n, (up - lb) / F.nullif(mid, F.lit(0.0)) * 100.0
-            ),
-            "bb_pband": F.when(
-                rn >= bb_n, (c - lb) / F.nullif(up - lb, F.lit(0.0))
-            ),
-            "bb_hi": F.when(
-                rn >= bb_n, F.when(c > up, 1.0).otherwise(0.0)
-            ),
-            "bb_li": F.when(
-                rn >= bb_n, F.when(c < lb, 1.0).otherwise(0.0)
-            ),
-            "don_width": F.when(
-                rn >= don_n,
-                (du - dl) / F.nullif((du + dl) / 2.0, F.lit(0.0)) * 100.0,
-            ),
-            "don_pband": F.when(
-                rn >= don_n, (c - dl) / F.nullif(du - dl, F.lit(0.0))
-            ),
-            "aroon_ind": F.when(rn >= aroon_n, a_up - a_dn),
-            "vortex_diff": F.when(rn2 >= vortex_n + 1, vpos - vneg),
-        }
-    ).drop("__tr4", "__vp4", "__vn4")
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def add_indicators5(
@@ -1420,81 +1094,48 @@ def trend_battery_arrow(
     part_col: str = "symbol",
     idx_col: str = "time_idx",
 ) -> DataFrame:
-    """Chained-recursion trend indicators in ONE Arrow pass per series:
+    """Chained-recursion trend indicators, a kernel on the per-series
+    pass:
 
     - ``trix{trix_n}``: 100 · 1-step %change of EMA(EMA(EMA(close)))
     - ``ppo``: 100 · (EMA_fast − EMA_slow) / EMA_slow
     - ``kelt_mid``/``kelt_upper``/``kelt_lower``: Keltner channel —
       EMA(close, kelt_n) ± mult · Wilder-ATR(kelt_atr)
 
-    The true range is computed natively upstream (lag is a plain window
-    function); only the recursions live in Python, and every recursion
-    advances in the same loop so state chains (EMA of EMA) cost nothing
-    extra.
+    A null close carries every close recursion's state: trix/ppo are
+    null on that row, the Keltner lines keep the carried EMA (and ATR,
+    whose true range skips null terms like ``greatest``).
     """
-    w = _base(part_col, idx_col)
-    pc = F.lag(close_col).over(w)
-    tr = F.greatest(
-        F.col(high_col) - F.col(low_col),
-        F.abs(F.col(high_col) - pc),
-        F.abs(F.col(low_col) - pc),
-    )
-    src = df.withColumn("__tr", tr)
-
+    ops = frame_ops()
     a3 = 2.0 / (trix_n + 1.0)
     af, asl = 2.0 / (ppo_fast + 1.0), 2.0 / (ppo_slow + 1.0)
     ak, aa = 2.0 / (kelt_n + 1.0), 1.0 / kelt_atr
+    names = [f"trix{trix_n}", "ppo", "kelt_mid", "kelt_upper", "kelt_lower"]
 
-    fields = list(src.schema.fields) + [
-        StructField(c, DoubleType())
-        for c in (f"trix{trix_n}", "ppo", "kelt_mid", "kelt_upper", "kelt_lower")
-    ]
-    schema = StructType(fields)
+    def trix(x):
+        e3 = ops.ewm(ops.ewm(ops.ewm(x, a3), a3), a3)
+        prev = ops.lag(e3)
+        return np.where(prev != 0.0, 100.0 * (e3 - prev) / prev, np.nan)
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(idx_col)
-        xs = pdf[close_col].to_numpy()
-        trs = pdf["__tr"].to_numpy()
-        n = len(xs)
-        trix = [None] * n
-        ppo = [None] * n
-        km = [None] * n
-        ku = [None] * n
-        kl = [None] * n
-        e1 = e2 = e3 = prev_e3 = None
-        yf = ys = ek = eatr = None
-        for i in range(n):
-            x = xs[i]
-            if x == x and x is not None:
-                x = float(x)
-                e1 = x if e1 is None else (1.0 - a3) * e1 + a3 * x
-                e2 = e1 if e2 is None else (1.0 - a3) * e2 + a3 * e1
-                prev_e3 = e3
-                e3 = e2 if e3 is None else (1.0 - a3) * e3 + a3 * e2
-                if prev_e3 is not None and prev_e3 != 0.0:
-                    trix[i] = 100.0 * (e3 - prev_e3) / prev_e3
-                yf = x if yf is None else (1.0 - af) * yf + af * x
-                ys = x if ys is None else (1.0 - asl) * ys + asl * x
-                if ys != 0.0:
-                    ppo[i] = 100.0 * (yf - ys) / ys
-                ek = x if ek is None else (1.0 - ak) * ek + ak * x
-            t = trs[i]
-            if t == t and t is not None:
-                t = float(t)
-                eatr = t if eatr is None else (1.0 - aa) * eatr + aa * t
-            if ek is not None:
-                km[i] = ek
-                if eatr is not None:
-                    ku[i] = ek + kelt_mult * eatr
-                    kl[i] = ek - kelt_mult * eatr
-        pdf[f"trix{trix_n}"] = trix
-        pdf["ppo"] = ppo
-        pdf["kelt_mid"] = km
-        pdf["kelt_upper"] = ku
-        pdf["kelt_lower"] = kl
-        return pdf
+    def ppo(x):
+        yf, ys = ops.ewm(x, af), ops.ewm(x, asl)
+        return np.where(ys != 0.0, 100.0 * (yf - ys) / ys, np.nan)
 
-    return src.groupBy(part_col).applyInPandas(fn, schema).drop("__tr")
+    def kernel(cols):
+        c, h, lo = cols[close_col], cols[high_col], cols[low_col]
+        pc = ops.lag(c)
+        tr = np.fmax(np.fmax(h - lo, np.abs(h - pc)), np.abs(lo - pc))
+        ek = ops.carried(c, lambda x: ops.ewm(x, ak))
+        eatr = ops.carried(tr, lambda x: ops.ewm(x, aa))
+        return dict(zip(names, (
+            ops.on_valid(c, trix),
+            ops.on_valid(c, ppo),
+            ek,
+            ek + kelt_mult * eatr,
+            ek - kelt_mult * eatr,
+        )))
+
+    return series_pass(df, kernel, names, part_col, idx_col)
 
 
 def apply_ta_battery(

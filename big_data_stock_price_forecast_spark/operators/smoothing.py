@@ -7,29 +7,27 @@ polynomial over each length-w window and read off the fitted value.
 That makes every output a fixed dot product of input values:
 
 - interior points: one shared w-tap FIR kernel (the center row of the
-  projection matrix) — implemented natively as a windowed array dot
-  product (whole-stage codegen, no Python),
+  projection matrix),
 - the first/last w//2 points (scipy's ``mode='interp'`` edge handling):
   rows of the same projection matrix applied to the first/last w
-  samples — implemented in the per-series Arrow pass as two small
-  matrix-vector products.
+  samples — two small matrix-vector products.
 
 The projection matrix is derived here with plain numpy (pinv of a
-Vandermonde basis); no scipy dependency. At scale the native interior
-path dominates: it shuffles once on (symbol) for the window sort and
-stays JVM-side; the Arrow pass is only needed when exact polynomial
-edges are required.
+Vandermonde basis); no scipy dependency. :func:`savgol_smooth` is a
+kernel on the per-series pass (``seriespass.series_pass``), so after the
+indicator batteries it runs in the SAME Arrow pass, exact edges
+included. :func:`savgol_smooth_native` keeps the interior JVM-side
+(windowed array dot product, NULL edges) for plans with no pass.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-from functools import reduce
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .seriespass import series_pass
 
 
 def savgol_projection(window_length: int = 21, polyorder: int = 4) -> np.ndarray:
@@ -48,24 +46,35 @@ def savgol_kernel(window_length: int = 21, polyorder: int = 4) -> np.ndarray:
     return savgol_projection(window_length, polyorder)[window_length // 2]
 
 
+def savgol_fn(window_length: int = 21, polyorder: int = 4):
+    """``apply(y)``: full-series Savitzky–Golay with polynomial edge
+    fits (the numpy restatement of scipy's ``mode='interp'``). The
+    projection is computed once here; ``apply`` is built in this
+    function so Spark ships it to workers by value."""
+    w, h = window_length, window_length // 2
+    p = savgol_projection(w, polyorder)
+
+    def apply(y):
+        y = np.asarray(y, dtype=np.float64)
+        n = len(y)
+        if n < w:
+            # short series: one global polynomial fit (degree capped by n)
+            deg = min(polyorder, n - 1)
+            coef = np.polynomial.polynomial.polyfit(np.arange(n), y, deg)
+            return np.polynomial.polynomial.polyval(np.arange(n), coef)
+        windows = np.lib.stride_tricks.sliding_window_view(y, w)
+        return np.concatenate(
+            [p[:h] @ y[:w], windows @ p[h], p[h + 1 :] @ y[-w:]]
+        )
+
+    return apply
+
+
 def savgol_np(
     y: np.ndarray, window_length: int = 21, polyorder: int = 4
 ) -> np.ndarray:
-    """Full-series Savitzky–Golay with polynomial edge fits (the numpy
-    restatement of scipy's ``mode='interp'``)."""
-    y = np.asarray(y, dtype=np.float64)
-    n = len(y)
-    w, h = window_length, window_length // 2
-    if n < w:
-        # short series: one global polynomial fit (degree capped by n)
-        deg = min(polyorder, n - 1)
-        coef = np.polynomial.polynomial.polyfit(np.arange(n), y, deg)
-        return np.polynomial.polynomial.polyval(np.arange(n), coef)
-    p = savgol_projection(w, polyorder)
-    windows = np.lib.stride_tricks.sliding_window_view(y, w)
-    return np.concatenate(
-        [p[:h] @ y[:w], windows @ p[h], p[h + 1 :] @ y[-w:]]
-    )
+    """Full-series Savitzky–Golay with polynomial edge fits."""
+    return savgol_fn(window_length, polyorder)(y)
 
 
 def savgol_smooth(
@@ -77,24 +86,20 @@ def savgol_smooth(
     polyorder: int = 4,
 ) -> DataFrame:
     """Exact Savitzky–Golay (interior + polynomial edges) for each of
-    ``cols``, one Arrow pass per series via ``applyInPandas`` — the
-    escape hatch the reference's sequential scipy call maps to. Output
-    adds ``{col}_sg`` columns.
+    ``cols``, a kernel on the per-series pass — the escape hatch the
+    reference's sequential scipy call maps to; it fuses with the
+    indicator batteries that precede it. Output adds ``{col}_sg``
+    columns; a NULL input value nulls every output whose window
+    covers it.
     """
-    out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-        + [f"`{c}_sg` double" for c in cols]
+    apply = savgol_fn(window_length, polyorder)
+
+    def kernel(series):
+        return {f"{c}_sg": apply(series[c]) for c in cols}
+
+    return series_pass(
+        df, kernel, [f"{c}_sg" for c in cols], part_col, order_col
     )
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_col)
-        for c in cols:
-            pdf[f"{c}_sg"] = savgol_np(
-                pdf[c].to_numpy(), window_length, polyorder
-            )
-        return pdf
-
-    return df.groupBy(part_col).applyInPandas(smooth, schema=out_schema)
 
 
 def savgol_smooth_native(

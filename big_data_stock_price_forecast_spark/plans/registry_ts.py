@@ -1992,9 +1992,9 @@ def q_ts_savgol(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_ts_indicators_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-expressible indicator battery — batteries 1+2 on ONE
-    lineage (every window shares the same partition spec, so Catalyst
-    plans a single sort and zero extra exchanges; previously two
-    queries scanning the pipeline twice)."""
+    lineage: the two kernels fuse into a single per-series Arrow pass
+    (operators/seriespass.py), one sort and no exchange of its own;
+    previously two queries scanning the pipeline twice."""
     from ..operators.rolling import add_indicators, add_indicators2
 
     df = add_indicators2(add_indicators(_filled_ohlc(spark, sf_dir)))
@@ -2057,9 +2057,9 @@ def q_ts_indicators4(spark: SparkSession, sf_dir: str) -> DataFrame:
     natively (reference core/data/preprocess.py:11-16): band width /
     %B / band-cross indicators, Donchian width/percent, Aroon and
     Vortex differentials, raw ease-of-movement, percent returns. Every
-    expression tree is IDENTICAL to the green base batteries', so the
-    oracle parity argument is inherited, and all columns ride the one
-    shared sort."""
+    column is arithmetic over the SAME base quantities as the green
+    base batteries, so the oracle parity argument is inherited; the
+    kernel runs in the per-series Arrow pass."""
     from ..operators.rolling import add_indicators4
 
     df = add_indicators4(_filled_ohlc(spark, sf_dir))
@@ -2080,7 +2080,7 @@ def q_ts_indicators5(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass) and histograms, Keltner channel width / %B, Stochastic-RSI
     %K / %D (3-SMAs), and the PSAR up/down value splits + trend-flip
     indicators. Emitted IN the battery's single Arrow pass
-    (``derived_tail=True``): an ``applyInPandas`` output carries no
+    (``derived_tail=True``): an Arrow pass's output carries no
     partitioning metadata, so the composable native twin
     (``add_indicators5``, cross-pinned bitwise-equal in tests) would
     re-shuffle the whole battery frame for its Window — in-pass
